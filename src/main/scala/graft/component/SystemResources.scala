@@ -11,7 +11,7 @@ import scala.util.Try
   * `local[n]` and every shuffle partition count.
   *
   * Detection order mirrors the reference: cgroup v1 then v2, `None` when
-  * unlimited ("max", quota -1) or unreadable. Resolution order: explicit
+  * unlimited ("max", quota -1, a memory limit ≥ host RAM) or unreadable. Resolution order: explicit
   * config value wins; else detection; else defaults (4 threads / 4096 MB).
   * Detected memory is reduced by a fixed runtime reserve. */
 object SystemResources {
@@ -53,14 +53,26 @@ object SystemResources {
     }
   }
 
+  /** Host RAM (MB), `MemTotal` of `/proc/meminfo`; None when unreadable. */
+  def hostMemoryMb(meminfo: String = "/proc/meminfo"): Option[Long] =
+    readTrimmed(Paths.get(meminfo)).flatMap(_.linesIterator.collectFirst {
+      case l if l.startsWith("MemTotal:") => l.split("\\s+")
+    }).collect { case Array(_, kb, _*) => kb }
+      .flatMap(kb => Try(kb.toLong / 1024L).toOption)
+
   /** Memory limit (MB) from cgroup v1 (`memory/memory.limit_in_bytes`) or
-    * v2 (`memory.max` = bytes | "max"). None = no limit found. */
-  def detectMemoryMb(root: String = "/sys/fs/cgroup"): Option[Long] = {
-    val v1 = readLong(Paths.get(root, "memory", "memory.limit_in_bytes"))
-      .filter(_ > 0).map(_ / (1024L * 1024L))
+    * v2 (`memory.max` = bytes | "max"). None = no limit found. An
+    * unlimited cgroup may hold a page-rounded `Long.MaxValue`
+    * (9223372036854771712) instead of "max", so any value ≥ host RAM
+    * counts as no limit. */
+  def detectMemoryMb(root: String = "/sys/fs/cgroup",
+                     hostMb: Option[Long] = hostMemoryMb()): Option[Long] = {
+    def limit(bytes: Long): Option[Long] =
+      Some(bytes / (1024L * 1024L)).filter(mb => bytes > 0 && hostMb.forall(mb < _))
+    val v1 = readLong(Paths.get(root, "memory", "memory.limit_in_bytes")).flatMap(limit)
     v1.orElse {
       readTrimmed(Paths.get(root, "memory.max")).filter(_ != "max")
-        .flatMap(s => Try(s.toLong).toOption).map(_ / (1024L * 1024L))
+        .flatMap(s => Try(s.toLong).toOption).flatMap(limit)
     }
   }
 

@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions registration exposing graft's native expressions
   * as SQL functions, so `spark.sql("SELECT simhash64(text) ...")` works
-  * next to the Column API. Enable with:
+  * next to the Column API. Every session built by [[graft.GraftSession]]
+  * carries it:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * val spark = graft.GraftSession.build(threads = 4)
+  * // sets "spark.sql.extensions" -> "graft.functions.GraftExtensions"
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

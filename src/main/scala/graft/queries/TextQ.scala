@@ -163,8 +163,8 @@ object TextQ {
       // STRICT width for both window exchanges: the explode-generated
       // (doc, term) rows are invisible to AQE's byte-based coalescing, so
       // it collapses each 150-250 ms stage to ONE task and the stages run
-      // serially (measured: AQE-coalesced warm 0.54 s vs 0.28 s pinned,
-      // T05Probe). Width = shuffle.partitions/4 — the distinct-pair
+      // serially (measured at sf0.1: AQE-coalesced warm 0.54 s vs 0.28 s
+      // pinned; PLANS_r07.md, t05). Width = shuffle.partitions/4 — the distinct-pair
       // relation the map-side TF dedup produces is genuinely smaller than
       // the token stream full width is sized for.
       val w = math.max(1,

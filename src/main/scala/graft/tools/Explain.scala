@@ -1,25 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Print the executed physical plan of named queries (comma list in
-  * GRAFT_ONLY) against SPARK_GRAFT_SF_DIR — the plan-audit companion to
-  * [[Profile]]: run the query once (so AQE finalizes), then dump the
-  * adaptive plan for exchange/codegen inspection. */
+/** Print the executed physical plan of the named queries (comma list in
+  * GRAFT_ONLY; every query when unset) against SPARK_GRAFT_SF_DIR — the
+  * plan-audit companion to [[Profile]]: run the query once (so AQE
+  * finalizes), then dump the adaptive plan for shuffle/pushdown/broadcast
+  * and codegen inspection. The session is the product config, so these
+  * are the plans the component runs. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val names = sys.env.getOrElse("GRAFT_ONLY", "").split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-explain")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val only = sys.env.get("GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = only.getOrElse(Set.empty) -- graft.SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
+    val spark = graft.GraftSession.build(graft.GraftSession.devThreads)
     try {
-      for (n <- names) {
+      for (n <- graft.SparkEntry.queries.keys.toSeq.sorted
+           if only.forall(_.contains(n))) {
         // benched variant when one exists (the plan the bench prices)
         val df = graft.SparkEntry.benchQueries
           .getOrElse(n, graft.SparkEntry.queries(n))(spark, sfDir)

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Cgroup detection (A23) against fake cgroup trees — v1, v2, unlimited,
-  * and the config-beats-detection-beats-default resolution order. */
+/** Cgroup detection (A23) against fake cgroup trees — v1, v2, unlimited
+  * (including the page-rounded Long.MaxValue sentinel), and the
+  * config-beats-detection-beats-default resolution order. */
 class SystemResourcesSpec extends AnyFunSuite {
 
   private def cgroup(files: (String, String)*): Path = {
@@ -51,6 +52,45 @@ class SystemResourcesSpec extends AnyFunSuite {
     assert(SystemResources.optimalMemoryMb(v2.toString).contains(768L))
     val unlimited = cgroup("memory.max" -> "max")
     assert(SystemResources.detectMemoryMb(unlimited.toString).isEmpty)
+  }
+
+  // what an unlimited cgroup holds on many hosts (v1 always, v2 on some
+  // kernels): Long.MaxValue rounded down to the page size
+  private val Unlimited = "9223372036854771712"
+
+  test("cgroup v1 unlimited sentinel is no limit, not 8796093021951 MB") {
+    val root = cgroup("memory/memory.limit_in_bytes" -> s"$Unlimited\n")
+    assert(SystemResources.detectMemoryMb(root.toString, hostMb = Some(16384L)).isEmpty)
+    // the real host's RAM is below the sentinel too
+    assert(SystemResources.detectMemoryMb(root.toString).isEmpty)
+    assert(SystemResources.resolveMemoryMb(None, root.toString) ==
+      SystemResources.DefaultMemoryMb)
+  }
+
+  test("cgroup v2 unlimited sentinel is no limit") {
+    val root = cgroup("memory.max" -> s"$Unlimited\n")
+    assert(SystemResources.detectMemoryMb(root.toString, hostMb = Some(16384L)).isEmpty)
+    assert(SystemResources.optimalMemoryMb(root.toString).isEmpty)
+  }
+
+  test("a memory limit at or above host RAM is no limit; below it is kept") {
+    val atHost = cgroup("memory.max" -> s"${16384L * 1048576}")
+    assert(SystemResources.detectMemoryMb(atHost.toString, hostMb = Some(16384L)).isEmpty)
+    assert(SystemResources.detectMemoryMb(atHost.toString, hostMb = Some(16385L))
+      .contains(16384L))
+    // unlimited v1 falls through to a real v2 limit
+    val both = cgroup(
+      "memory/memory.limit_in_bytes" -> Unlimited,
+      "memory.max" -> s"${3072L * 1048576}")
+    assert(SystemResources.detectMemoryMb(both.toString, hostMb = Some(16384L))
+      .contains(3072L))
+  }
+
+  test("host RAM comes from /proc/meminfo's MemTotal") {
+    val root = cgroup("meminfo" -> "MemFree:  100 kB\nMemTotal:       16479424 kB\n")
+    assert(SystemResources.hostMemoryMb(root.resolve("meminfo").toString)
+      .contains(16093L))
+    assert(SystemResources.hostMemoryMb(root.resolve("absent").toString).isEmpty)
   }
 
   test("resolution order: config > detection > default") {
