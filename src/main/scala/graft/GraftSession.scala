@@ -68,9 +68,13 @@ object GraftSession {
     "spark.shuffle.sort.bypassMergeThreshold" -> "8")
 
   /** Builds (or returns the running) session with [[settings]], plus
-    * [[SingleHost]] when `singleHost`. Graft replaces built-in functions
-    * on purpose, so the registry's "replaced a previously registered
-    * function" WARN is silenced. */
+    * [[SingleHost]] when `singleHost`. Two WARNs that report normal
+    * operation are silenced:
+    *  - graft replaces built-in functions on purpose, so the registry's
+    *    "replaced a previously registered function";
+    *  - every read of a parquet glob probes it for a streaming-sink
+    *    metadata directory and logs "Assume no metadata directory" with
+    *    a FileNotFoundException stack trace. */
   def build(threads: Int, memMb: Option[Long] = None,
             singleHost: Boolean = false): SparkSession = {
     val spark = (settings(threads, memMb) ++ (if (singleHost) SingleHost else Nil))
@@ -80,6 +84,8 @@ object GraftSession {
     // after getOrCreate: Spark (re)loads its log4j config on first use
     Configurator.setLevel(
       "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry", Level.ERROR)
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink", Level.ERROR)
     spark
   }
 

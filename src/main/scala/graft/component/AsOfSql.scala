@@ -81,7 +81,8 @@ object AsOfSql {
     }
   }
 
-  /** Strip `alias.` or leave bare; reject other qualifiers. */
+  /** Strip `alias.` or leave bare; reject other qualifiers (a qualifier
+    * split, not a copy of Dialect.unquote). */
   private def unq(term0: String, la: String, ra: String): (String, String) = {
     val term = term0.trim.stripPrefix("\"").stripSuffix("\"")
       .stripPrefix("`").stripSuffix("`")
@@ -157,9 +158,8 @@ object AsOfSql {
     val leftOuter = asofM.group(1) != null
     usingMOpt match {
       case Some(usingM) =>
-        val cols = stmt.substring(usingM.end, usingClose.get)
-          .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")
-            .stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty).toSeq
+        val cols = Dialect.splitTop(stmt.substring(usingM.end, usingClose.get))
+          .map(Dialect.unquote).filter(_.nonEmpty)
         if (cols.length < 2) return None // at least one key + the bound
         return Some(Parsed(selList, leftSrc, leftAlias, rightSrc, rightAlias,
           cols.init.map(c => (c, c)), cols.last, cols.last, leftOuter,
@@ -278,15 +278,6 @@ object AsOfSql {
             m => "`" + m.group(1) + "`")
         s
       }
-      // depth-0 comma split helper (shared by select list and ORDER BY)
-      def splitTop(s: String): Seq[String] = {
-        val m = Dialect.maskQuoted(s)
-        val d = Dialect.depths(m)
-        val cutsAt = m.zipWithIndex.collect { case (',', i) if d(i) == 0 => i }
-        (Seq(-1) ++ cutsAt :+ s.length).sliding(2).map {
-          case Seq(a, b) => s.substring(a + 1, b).trim
-        }.filter(_.nonEmpty).toSeq
-      }
       val afterWhere = p.where match {
         case Some(w) => cleaned.where(expr(rewriteRefs(w)))
         case None    => cleaned
@@ -309,11 +300,11 @@ object AsOfSql {
           // selectExpr over the rewritten list: no temp-view registration
           // per call (a long-lived session must not accumulate catalog
           // entries for every statement it ever executed)
-          afterWhere.selectExpr(splitTop(rewriteRefs(p.selList)): _*)
+          afterWhere.selectExpr(Dialect.splitTop(rewriteRefs(p.selList)): _*)
         }
       val afterSort = p.orderBy match {
         case Some(ob) =>
-          val cols = splitTop(rewriteRefs(ob)).map { piece =>
+          val cols = Dialect.splitTop(rewriteRefs(ob)).map { piece =>
             val m = "(?is)^(.*?)(?:\\s+(ASC|DESC))?(?:\\s+NULLS\\s+(FIRST|LAST))?\\s*$".r
               .findFirstMatchIn(piece).get
             val base = expr(m.group(1))

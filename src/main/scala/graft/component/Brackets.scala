@@ -381,6 +381,7 @@ object Brackets {
                             open: Int, close: Int): Option[String] = {
     val body = stmt.substring(open + 1, close)
     val mbody = masked.substring(open + 1, close)
+    // not Dialect.splitTop: each entry keeps its masked twin
     val cuts = {
       val b = scala.collection.mutable.ArrayBuffer[Int]()
       var d = 0

@@ -100,7 +100,8 @@ object ColumnsSql {
     val cols: Seq[String] =
       bodyDf(s"SELECT * $probeTail").schema.map(_.name)
 
-    // depth-0 comma split of the select list
+    // depth-0 comma split of the select list — not Dialect.splitTop: each
+    // item keeps its masked twin and its untrimmed text
     val selList = body.substring(selM.end, fromM.start)
     val mSel = masked.substring(selM.end, fromM.start)
     val cuts = {
@@ -229,14 +230,6 @@ object ColumnsSql {
     *    scope), exactly the binder's rule. */
   private def argMatches(arg: String, cols: Seq[String],
                          bodyDf: String => DataFrame): Seq[String] = {
-    def unq(s: String): String = {
-      val t = s.trim
-      if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-        t.substring(1, t.length - 1).replace("''", "'")
-      else if (t.length >= 2 && (t.head == '"' || t.head == '`') &&
-        t.last == t.head) t.substring(1, t.length - 1)
-      else t
-    }
     val starEx =
       "(?is)^\\*\\s*(?:EXCEPT|EXCLUDE)\\s*(?:\\(([^)]*)\\)|([A-Za-z_]\\w*))\\s*$".r
     val listForm = "(?is)^(?:array\\s*\\((.*)\\)|\\[(.*)\\])\\s*$".r
@@ -249,7 +242,7 @@ object ColumnsSql {
       case starEx(listTxt, single) =>
         val excluded = Option(listTxt)
           .map(_.split(",").toSeq).getOrElse(Seq(single))
-          .map(e => unq(e)).filter(_.nonEmpty)
+          .map(e => Dialect.unquote(e)).filter(_.nonEmpty)
         excluded.foreach(e => if (!cols.exists(_.equalsIgnoreCase(e)))
           throw new UserException(
             s"COLUMNS(* EXCLUDE): column $e not found in " +
@@ -258,7 +251,7 @@ object ColumnsSql {
         cols.filterNot(c => ex(c.toLowerCase))
       case listForm(a, b) =>
         val names = Option(a).getOrElse(b).split(",").toSeq
-          .map(unq).filter(_.nonEmpty)
+          .map(Dialect.unquote).filter(_.nonEmpty)
         if (names.isEmpty) throw new UserException(
           "COLUMNS([...]): the name list is empty")
         names.foreach(n => if (!cols.exists(_.equalsIgnoreCase(n)))

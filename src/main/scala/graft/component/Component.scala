@@ -141,12 +141,10 @@ object Component {
         System.err.println(
           s"[debug] memory: block manager $exec storage ${max / 1048576} MB max, ${free / 1048576} MB free")
       }
-      // spill/scratch usage: size of each spark.local.dir (shuffle + spill
-      // files) — the analogue of the reference's DuckDB temp-file listing
-      val localDirs = spark.sparkContext.getConf
-        .get("spark.local.dir", sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-        .split(",")
-      localDirs.foreach { dir =>
+      // spill/scratch usage: size of each local dir Spark writes shuffle +
+      // spill files to — the analogue of the reference's DuckDB temp-file
+      // listing
+      org.apache.spark.sql.GraftSqlBridge.localDirs(spark).foreach { dir =>
         val p = java.nio.file.Paths.get(dir.trim)
         // the walk races concurrent shuffle-file cleanup and may hit
         // unreadable entries (shared /tmp): a debug report must never

@@ -35,9 +35,6 @@ object ConstraintSql {
     Set("not", "null", "default", "check", "primary", "unique",
       "references", "collate", "foreign")
 
-  private def stripQuotes(s: String): String =
-    s.stripPrefix("\"").stripSuffix("\"").stripPrefix("`").stripSuffix("`")
-
   /** Forward-scan one DEFAULT value: quoted literal, parenthesized
     * expression, `ident(args)` call, or a bare token — optionally
     * followed by `::type` casts and chained through binary operators
@@ -129,7 +126,7 @@ object ConstraintSql {
     val constraintStart = words.drop(1)
       .find(m => constraintKw(m.group(0).toLowerCase)).map(_.start)
       .getOrElse(item.length)
-    val cleaned = s"`${stripQuotes(name)}` " +
+    val cleaned = s"`${Dialect.unquote(name)}` " +
       item.substring(i, constraintStart).trim
     var notNull = false
     var default: Option[String] = None
@@ -184,7 +181,7 @@ object ConstraintSql {
           }
       }
     }
-    Some(Col(stripQuotes(name), cleaned, notNull, default, checks.toList, unique))
+    Some(Col(Dialect.unquote(name), cleaned, notNull, default, checks.toList, unique))
   }
 
   /** Classify and parse a full item list (already split at top commas).
@@ -209,7 +206,7 @@ object ConstraintSql {
         val close = Dialect.matchingParen(masked, open)
         if (close > 0)
           uniques += it.substring(open + 1, close).split(",")
-            .map(c => stripQuotes(c.trim)).toSeq
+            .map(c => Dialect.unquote(c.trim)).toSeq
       } else parseColumn(it).foreach { c =>
         cols += c
         if (c.unique) uniques += Seq(c.name)

@@ -57,33 +57,22 @@ object CopyTo {
       .replaceFirstIn(after.substring(pathM.end).trim, "")
     val opts: Map[String, String] =
       parseOptions(rest).getOrElse(return None)
-    def unq(s: String) =
-      s.stripPrefix("'").stripSuffix("'").replace("''", "'")
-    val fmt = opts.get("FORMAT").map(v => unq(v).toUpperCase)
-      .getOrElse {
-        val p = path.toLowerCase
-        if (p.endsWith(".parquet") || p.endsWith(".parq")) "PARQUET"
-        else if (p.endsWith(".json") || p.endsWith(".jsonl") || p.endsWith(".ndjson")) "JSON"
-        else "CSV"
-      }
+    val fmt = formatOf(opts, path)
     if (!Set("CSV", "PARQUET", "JSON")(fmt)) return None
     Some(Parsed(
       source, path, fmt,
       header = opts.get("HEADER")
         .forall(v => !(v.equalsIgnoreCase("false") || v == "0")),
       delimiter = opts.get("DELIMITER").orElse(opts.get("DELIM"))
-        .orElse(opts.get("SEP")).map(unq).getOrElse(","),
-      quote = opts.get("QUOTE").map(unq).getOrElse("\""),
+        .orElse(opts.get("SEP")).map(Dialect.unquote).getOrElse(","),
+      quote = opts.get("QUOTE").map(Dialect.unquote).getOrElse("\""),
       forceQuote = opts.get("FORCE_QUOTE").isDefined,
       // DuckDB's NULL 'str' option: the written NULL sentinel (default
       // empty, DuckDB's own default)
-      nullStr = opts.get("NULL").orElse(opts.get("NULLSTR")).map(unq),
-      partitionBy = opts.get("PARTITION_BY").toSeq.flatMap { v =>
-        v.trim.stripPrefix("(").stripSuffix(")").split(",")
-          .map(_.trim.stripPrefix("`").stripSuffix("`")
-            .stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-      }))
+      nullStr = opts.get("NULL").orElse(opts.get("NULLSTR")).map(Dialect.unquote),
+      partitionBy = opts.get("PARTITION_BY").toSeq.flatMap(v =>
+        Dialect.splitTop(v.trim.stripPrefix("(").stripSuffix(")"))
+          .map(Dialect.unquote))))
   }
 
   /** `(KEY [value], ...)` option list (also the `WITH (...)` spelling,
@@ -94,30 +83,15 @@ object CopyTo {
   private[component] def parseOptions(rest: String): Option[Map[String, String]] =
     if (rest.isEmpty) Some(Map.empty)
     else if (rest.startsWith("(") && rest.endsWith(")")) {
-      val inner = rest.substring(1, rest.length - 1)
-      val innerMasked = Dialect.maskQuoted(inner)
-      val innerDep = Dialect.depths(innerMasked)
-      val cuts = innerMasked.zipWithIndex.collect {
-        case (',', i) if innerDep(i) == 0 => i }
-      Some((Seq(-1) ++ cuts :+ inner.length).sliding(2).flatMap {
-        case Seq(a, b) =>
-          val piece = inner.substring(a + 1, b).trim
-          if (piece.isEmpty) None
-          else {
-            val sp = piece.split("\\s+", 2)
-            Some(sp(0).toUpperCase ->
-              (if (sp.length > 1) sp(1).trim else "true"))
-          }
-        case _ => None
+      Some(Dialect.splitTop(rest.substring(1, rest.length - 1)).map { piece =>
+        val sp = piece.split("\\s+", 2)
+        sp(0).toUpperCase -> (if (sp.length > 1) sp(1).trim else "true")
       }.toMap)
     } else None
 
-  private[component] def unquote(s: String): String =
-    s.stripPrefix("'").stripSuffix("'").replace("''", "'")
-
   private[component] def formatOf(opts: Map[String, String],
                                   path: String): String =
-    opts.get("FORMAT").map(v => unquote(v).toUpperCase).getOrElse {
+    opts.get("FORMAT").map(v => Dialect.unquote(v).toUpperCase).getOrElse {
       val p = path.toLowerCase
       if (p.endsWith(".parquet") || p.endsWith(".parq")) "PARQUET"
       else if (p.endsWith(".json") || p.endsWith(".jsonl") ||
@@ -265,31 +239,13 @@ object CopyFrom {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
     if (!"(?is)^\\s*COPY\\b".r.findFirstIn(masked).isDefined) return None
-    val dep = {
-      val out = new Array[Int](masked.length)
-      var d = 0; var i = 0
-      while (i < masked.length) {
-        val c = masked.charAt(i)
-        if (c == '(') { out(i) = d; d += 1 }
-        else if (c == ')') { d -= 1; out(i) = d }
-        else out(i) = d
-        i += 1
-      }
-      out
-    }
+    val dep = Dialect.depths(masked)
     // a COPY ... TO is the export statement, not this one
     if ("(?is)\\bTO\\b".r.findAllMatchIn(masked).exists(m => dep(m.start) == 0))
       return None
     val fromM = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
       .find(m => dep(m.start) == 0).getOrElse(return None)
-    val target0 = stmt.substring(4, fromM.start).trim
-    val target =
-      if (target0.length >= 2 &&
-          ((target0.head == '\'' && target0.last == '\'') ||
-           (target0.head == '"' && target0.last == '"') ||
-           (target0.head == '`' && target0.last == '`')))
-        target0.substring(1, target0.length - 1)
-      else target0
+    val target = Dialect.unquote(stmt.substring(4, fromM.start))
     if (target.isEmpty || target.contains("(")) return None
     val after = stmt.substring(fromM.end).trim
     val pathM = "(?s)^'((?:[^']|'')*)'".r.findFirstMatchIn(after).getOrElse(return None)
@@ -305,12 +261,12 @@ object CopyFrom {
       header = opts.get("HEADER")
         .exists(v => !(v.equalsIgnoreCase("false") || v == "0")),
       delimiter = opts.get("DELIMITER").orElse(opts.get("DELIM"))
-        .orElse(opts.get("SEP")).map(CopyTo.unquote).getOrElse(","),
-      quote = opts.get("QUOTE").map(CopyTo.unquote).getOrElse("\""),
+        .orElse(opts.get("SEP")).map(Dialect.unquote).getOrElse(","),
+      quote = opts.get("QUOTE").map(Dialect.unquote).getOrElse("\""),
       // DuckDB's NULL 'str' option — EXPORT DATABASE writes NULL '\N' so
       // empty VARCHAR and NULL survive the CSV round-trip distinctly
       nullStr = opts.get("NULL").orElse(opts.get("NULLSTR"))
-        .map(CopyTo.unquote)))
+        .map(Dialect.unquote)))
   }
 
   /** Static-analysis twin: COPY FROM both requires and mutates the

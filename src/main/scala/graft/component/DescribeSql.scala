@@ -69,8 +69,7 @@ object DescribeSql {
     if ("(?is)^(SELECT|WITH|FROM|TABLE|\\()".r.findFirstIn(t).isDefined)
       bodyDf(if (t.startsWith("(")) t.substring(1, t.length - 1) else t)
     else {
-      val name = t.stripPrefix("`").stripSuffix("`")
-      spark.table(s"`${Names.view(name)}`")
+      spark.table(s"`${Names.view(Dialect.unquote(t))}`")
     }
   }
 

@@ -814,6 +814,33 @@ object Dialect {
     out
   }
 
+  /** Depth-0 comma split — commas inside (), [] or {} and quoted regions
+    * never cut — with pieces trimmed and empty ones dropped. The ONE
+    * list splitter for the statement-rewrite family. */
+  private[component] def splitTop(s: String): Seq[String] = {
+    val masked = maskQuoted(s)
+    val cuts = scala.collection.mutable.ArrayBuffer(-1)
+    var d = 0
+    for (i <- masked.indices) masked.charAt(i) match {
+      case '(' | '[' | '{' => d += 1
+      case ')' | ']' | '}' => d -= 1
+      case ',' if d == 0 => cuts += i
+      case _ =>
+    }
+    (cuts :+ s.length).sliding(2).map(p => s.substring(p(0) + 1, p(1)).trim)
+      .filter(_.nonEmpty).toSeq
+  }
+
+  /** The content of one quoted token: `'…'` is a string (`''` unescapes),
+    * `"…"` and `` `…` `` are identifiers (a doubled quote unescapes);
+    * anything else comes back trimmed. The ONE unquote for the family. */
+  private[component] def unquote(s: String): String = {
+    val t = s.trim
+    if (t.length >= 2 && "'\"`".indexOf(t.head) >= 0 && t.last == t.head)
+      t.substring(1, t.length - 1).replace(s"${t.head}${t.head}", t.head.toString)
+    else t
+  }
+
   /** DuckDB `SELECT DISTINCT ON (keys) ...` (keep the first row per key
     * group under the block's ORDER BY) rewrites to a QUALIFY row_number
     * filter, which [[rewriteQualify]] then lowers to a window subquery.
@@ -1924,26 +1951,6 @@ object Dialect {
             rewriteSeriesTableFns(stmt.substring(close + 1))
         }
     }
-  }
-
-  private def splitTop(args: String): Array[String] = {
-    val masked = maskQuoted(args)
-    val cuts = scala.collection.mutable.ArrayBuffer[Int]()
-    var d = 0
-    var i = 0
-    while (i < masked.length) {
-      masked.charAt(i) match {
-        case '(' | '[' => d += 1
-        case ')' | ']' => d -= 1
-        case ',' if d == 0 => cuts += i
-        case _ =>
-      }
-      i += 1
-    }
-    ((Seq(-1) ++ cuts.toSeq) :+ args.length).sliding(2).map {
-      case Seq(a, b) => args.substring(a + 1, b).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toArray
   }
 
   /** DuckDB `USING SAMPLE` — `FROM <rels> USING SAMPLE <spec>` samples

@@ -28,6 +28,41 @@ final case class ExecutionStats(timings: List[QueryTiming]) {
   def total: Double = timings.map(_.seconds).sum
 }
 
+/** One table's constraint state.
+  *  - `pk`: the DDL-declared PRIMARY KEY. It is kept SEPARATE from
+  *    index-contributed keys: DROP INDEX must never retract a PRIMARY
+  *    KEY that happens to share its column set.
+  *  - `defaults`: column (lowercased) → DEFAULT expression text.
+  *    Partial-column INSERTs and the DEFAULT keyword draw from here
+  *    (probed v1.0).
+  *  - `notNull`, `checks`: enforced on every table write. */
+private[component] final case class TableMeta(
+    pk: Seq[String] = Nil,
+    defaults: Map[String, String] = Map.empty,
+    notNull: Seq[String] = Nil,
+    checks: Seq[String] = Nil) {
+  // probed: a CHECK referencing the column renames WITH it; PK
+  // columns rename in place
+  def renameColumn(c: String, to: String): TableMeta = {
+    def ren(cols: Seq[String]) = cols.map(k => if (k.equalsIgnoreCase(c)) to else k)
+    copy(pk = ren(pk),
+      defaults = defaults.get(c.toLowerCase).fold(defaults)(d =>
+        defaults - c.toLowerCase + (to.toLowerCase -> d)),
+      notNull = ren(notNull),
+      checks = checks.map(TableMeta.wordRe(c).replaceAllIn(_,
+        java.util.regex.Matcher.quoteReplacement(to))))
+  }
+  def dropColumn(c: String): TableMeta =
+    copy(defaults = defaults - c.toLowerCase,
+      notNull = notNull.filterNot(_.equalsIgnoreCase(c)))
+}
+
+private[component] object TableMeta {
+  /** `c` as a whole word, case-insensitive (CHECK-expression references). */
+  def wordRe(c: String): scala.util.matching.Regex =
+    ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
+}
+
 class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   // TEMP is accepted and treated like a regular object (the whole run is
@@ -70,11 +105,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
   private val createEmpty =
     """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?([^`\s(]+)`?\s*\((.+)\)\s*;?\s*$""".r
 
-  /** The DDL-declared PRIMARY KEY per table (lowercased sanitized name).
-    * Kept SEPARATE from index-contributed keys: DROP INDEX must never
-    * retract a PRIMARY KEY that happens to share its column set. */
-  private val declaredPk =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
+  /** The constraint record per table (lowercased sanitized name). */
+  private val tableMeta = scala.collection.concurrent.TrieMap[String, TableMeta]()
+  private def meta(key: String): TableMeta = tableMeta.getOrElse(key, TableMeta())
+  private def updateMeta(key: String)(f: TableMeta => TableMeta): Unit =
+    tableMeta.put(key, f(meta(key)))
 
   // Types ride the warehouse like DuckDB types ride the database file
   // (the reference's passthrough contract): a `.types.sql` snapshot is
@@ -98,20 +133,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
-  /** Bare-DDL column DEFAULTs per table (lowercased sanitized name):
-    * column (lowercased) → default expression text. Partial-column
-    * INSERTs and the DEFAULT keyword draw from here (probed v1.0). */
-  private val tableDefaults =
-    scala.collection.concurrent.TrieMap[String, Map[String, String]]()
-
-  /** Bare-DDL NOT NULL columns and CHECK expressions per table —
-    * enforced on every materialization (assert_true filters riding the
-    * write pass; probed v1.0 raises constraint errors on violation). */
-  private val tableNotNull =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
-  private val tableChecks =
-    scala.collection.concurrent.TrieMap[String, Seq[String]]()
-
   /** Index name → (table, cols); cols empty for a non-unique index. The
     * single source of truth for index-contributed upsert keys: DROP INDEX
     * removes its entry, [[keysetsFor]] derives the live key sets. */
@@ -123,7 +144,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * SETS — a PK plus an identical UNIQUE index is ONE target, not a
     * "several key indexes" ambiguity. */
   private def keysetsFor(table: String): Vector[Seq[String]] = {
-    val all = declaredPk.get(table).toVector ++
+    val all = Vector(meta(table).pk).filter(_.nonEmpty) ++
       indexNames.values.collect { case (t, cols) if t == table && cols.nonEmpty => cols }
     all.foldLeft(Vector.empty[Seq[String]]) { (acc, ks) =>
       if (acc.exists(_.map(_.toLowerCase).toSet ==
@@ -138,10 +159,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * views registered by FileReads list as VIEWs — a documented
     * impurity vs DuckDB, whose table functions are not cataloged). */
   private lazy val introspectMeta: IntrospectSql.Meta = new IntrospectSql.Meta {
-    def pk(t: String): Seq[String] = declaredPk.getOrElse(t.toLowerCase, Nil)
-    def notNull(t: String): Seq[String] = tableNotNull.getOrElse(t.toLowerCase, Nil)
-    def defaults(t: String): Map[String, String] =
-      tableDefaults.getOrElse(t.toLowerCase, Map.empty)
+    def pk(t: String): Seq[String] = meta(t.toLowerCase).pk
+    def notNull(t: String): Seq[String] = meta(t.toLowerCase).notNull
+    def defaults(t: String): Map[String, String] = meta(t.toLowerCase).defaults
     def isBaseTable(n: String): Boolean =
       java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(warehouseDir, Names.view(n)))
@@ -151,10 +171,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         .sorted.toSeq
   }
 
-  /** Drop every piece of key metadata attached to `table` — called when
-    * the table object is dropped or replaced (DuckDB drops a table's
-    * indexes with it; a replacement table starts with no keys — stale
-    * keys surviving a CREATE OR REPLACE would mis-target later upserts). */
   /** One bare type text → Spark DataType (alias/enum names resolve
     * through the TypeSql store — the ALTER TABLE column paths sit
     * outside the statement positions TypeSql.substitute covers). */
@@ -163,11 +179,38 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       TypeSql.resolveTypeText(t)
         .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")).head.dataType
 
+  /** An ALTER TABLE target's sanitized name and current frame; loud when
+    * the table does not exist. */
+  private def alterTarget(name: String, form: String): (String, DataFrame) = {
+    val sanitized = Names.view(name)
+    if (!spark.catalog.tableExists(s"`$sanitized`"))
+      throw new UserException(s"ALTER TABLE ... $form: $name does not exist")
+    (sanitized, spark.table(s"`$sanitized`"))
+  }
+
+  private def noColumn(sanitized: String, c: String): UserException =
+    new UserException(
+      s"""Binder Error: Table "$sanitized" does not have a column with name "$c"""")
+
+  /** Column `c` of table `key` must not sit in a PRIMARY KEY / UNIQUE key
+    * (`onKey`) or a CHECK expression (`onCheck`) — probed v1.0: both
+    * block DROP COLUMN and a retype. */
+  private def guardColumnDeps(key: String, c: String,
+                              onKey: String, onCheck: String): Unit = {
+    val keys = meta(key).pk +: indexNames.values.collect {
+      case (t, cols) if t == key => cols }.toSeq
+    if (keys.exists(_.exists(_.equalsIgnoreCase(c))))
+      throw new UserException(onKey)
+    if (meta(key).checks.exists(TableMeta.wordRe(c).findFirstIn(_).isDefined))
+      throw new UserException(onCheck)
+  }
+
+  /** Drop every piece of key metadata attached to `table` — called when
+    * the table object is dropped or replaced (DuckDB drops a table's
+    * indexes with it; a replacement table starts with no keys — stale
+    * keys surviving a CREATE OR REPLACE would mis-target later upserts). */
   private def clearTableMeta(table: String): Unit = {
-    declaredPk.remove(table)
-    tableDefaults.remove(table)
-    tableNotNull.remove(table)
-    tableChecks.remove(table)
+    tableMeta.remove(table)
     indexNames.filterInPlace { case (_, (t, _)) => t != table }
   }
 
@@ -176,10 +219,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * name was just replaced). */
   private def renameTableMeta(from: String, to: String): Unit = {
     clearTableMeta(to)
-    declaredPk.remove(from).foreach(declaredPk.put(to, _))
-    tableDefaults.remove(from).foreach(tableDefaults.put(to, _))
-    tableNotNull.remove(from).foreach(tableNotNull.put(to, _))
-    tableChecks.remove(from).foreach(tableChecks.put(to, _))
+    tableMeta.remove(from).foreach(tableMeta.put(to, _))
     indexNames.mapValuesInPlace { case (_, (t, cols)) =>
       if (t == from) (to, cols) else (t, cols)
     }
@@ -302,7 +342,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           viewDefs.remove(sanitized.toLowerCase)
           viewDefs.put(sanitized.toLowerCase, (sanitized, body, deps))
         }
-        register(name, bodyDf(body))
+        bodyDf(body).createOrReplaceTempView(sanitized)
       }
 
     case createTable(ifNotExists, name, body) =>
@@ -310,8 +350,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           spark.catalog.tableExists(s"`${Names.view(name)}`")) ()
       else {
         clearTableMeta(Names.view(name).toLowerCase) // CTAS declares no keys
-        register(name, materialize(name, bodyDf(body)))
-        rebind(Names.view(name).toLowerCase)
+        writeTable(name, bodyDf(body))
       }
 
     case createEmpty(ifNotExists, name, colDefs)
@@ -324,67 +363,42 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         // they feed the upsert surface (INSERT ... ON CONFLICT /
         // OR REPLACE / OR IGNORE — DuckDB requires the declared key).
         // Both spellings: `k INT PRIMARY KEY` and `PRIMARY KEY (a, b)`.
-        val items = {
-          val masked = Dialect.maskQuoted(colDefs)
-          val dep = Dialect.depths(masked)
-          val cuts = masked.zipWithIndex.collect {
-            case (',', i) if dep(i) == 0 => i }
-          (Seq(-1) ++ cuts :+ colDefs.length).sliding(2).map {
-            case Seq(a, b) => colDefs.substring(a + 1, b).trim
-            case _ => ""
-          }.filter(_.nonEmpty).toList
-        }
+        val items = Dialect.splitTop(colDefs).toList
         val pkCols = items.flatMap { it =>
           "(?is)^PRIMARY\\s+KEY\\s*\\((.*)\\)\\s*$".r.findFirstMatchIn(it) match {
-            case Some(m) => m.group(1).split(",").map(_.trim
-              .stripPrefix("\"").stripSuffix("\"")
-              .stripPrefix("`").stripSuffix("`")).toSeq
+            case Some(m) => m.group(1).split(",").map(Dialect.unquote).toSeq
             case None if "(?is)\\bPRIMARY\\s+KEY\\b".r.findFirstIn(it).isDefined =>
-              Seq(it.split("[\\s(]", 2).head
-                .stripPrefix("\"").stripSuffix("\"")
-                .stripPrefix("`").stripSuffix("`"))
+              Seq(Dialect.unquote(it.split("[\\s(]", 2).head))
             case None => Nil
           }
         }
-        clearTableMeta(Names.view(name).toLowerCase) // replacement starts clean
         val key = Names.view(name).toLowerCase
-        if (pkCols.nonEmpty) declaredPk.put(key, pkCols)
+        clearTableMeta(key) // replacement starts clean
         // column defs → StructType via [[ConstraintSql]]: constraints
         // are PARSED OUT and reproduced (DEFAULT fill on inserts,
         // NOT NULL / CHECK enforced at materialization, UNIQUE as an
         // upsert conflict target) instead of silently stripped
         val parsed = ConstraintSql.parse(items)
-        val defaults = parsed.cols.flatMap(c =>
-          c.default.map(d => c.name.toLowerCase -> d)).toMap
-        if (defaults.nonEmpty) tableDefaults.put(key, defaults)
         val nn = parsed.cols.filter(_.notNull).map(_.name) ++
           pkCols.filterNot(pc =>
             parsed.cols.exists(c => c.notNull && c.name.equalsIgnoreCase(pc)))
-        if (nn.nonEmpty) tableNotNull.put(key, nn.distinct)
-        val cks = parsed.cols.flatMap(_.checks) ++ parsed.tableChecks
-        if (cks.nonEmpty) tableChecks.put(key, cks)
+        tableMeta.put(key, TableMeta(pkCols,
+          parsed.cols.flatMap(c => c.default.map(d => c.name.toLowerCase -> d)).toMap,
+          nn.distinct, parsed.cols.flatMap(_.checks) ++ parsed.tableChecks))
         parsed.uniqueSets.zipWithIndex.foreach { case (cols, i) =>
           indexNames.put(s"__ddl_unique_${key}_${i + 1}", (key, cols))
         }
         val cleaned = parsed.cols.map(_.cleaned).mkString(", ")
           .replaceAll("(?i)\\bVARCHAR\\b(?!\\s*\\()", "STRING")
         val schema = org.apache.spark.sql.types.StructType.fromDDL(cleaned)
-        val empty = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-        register(name, materialize(name, empty))
-        rebind(Names.view(name).toLowerCase)
+        writeTable(name, spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
       }
 
     case addPkStmt(name, colsTxt) =>
-      val sanitized = Names.view(name)
-      if (!spark.catalog.tableExists(s"`$sanitized`"))
-        throw new UserException(
-          s"ALTER TABLE ... ADD PRIMARY KEY: $name does not exist")
-      val existing = spark.table(s"`$sanitized`")
+      val (sanitized, existing) = alterTarget(name, "ADD PRIMARY KEY")
       val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
-      val pkCols = colsTxt.split(",").map(_.trim
-        .stripPrefix("\"").stripSuffix("\"")
-        .stripPrefix("`").stripSuffix("`")).toSeq
+      val pkCols = colsTxt.split(",").map(Dialect.unquote).toSeq
       val cols = pkCols.map(k => byLower.getOrElse(k.toLowerCase,
         throw new UserException(
           s"ALTER TABLE $name ADD PRIMARY KEY: column $k does not exist")))
@@ -405,15 +419,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         throw new UserException(
           s"ALTER TABLE $name ADD PRIMARY KEY: NULL in key column(s) " +
             s"(${cols.mkString(", ")}) — PRIMARY KEY columns are NOT NULL")
-      declaredPk.put(sanitized.toLowerCase, pkCols)
+      updateMeta(sanitized.toLowerCase)(_.copy(pk = pkCols))
 
     // ---- ALTER TABLE column DDL (probed v1.0 semantics throughout) ----
     case addColStmt(name, ifNotExists, itemTxt0) =>
-      val sanitized = Names.view(name)
-      val key = sanitized.toLowerCase
-      if (!spark.catalog.tableExists(s"`$sanitized`"))
-        throw new UserException(
-          s"ALTER TABLE ... ADD COLUMN: $name does not exist")
+      val (sanitized, existing) = alterTarget(name, "ADD COLUMN")
       val itemTxt = itemTxt0.trim
       // ADD PRIMARY KEY is the PREVIOUS case; a spelling that missed it
       // (e.g. nested parens) must not read as a column named PRIMARY
@@ -428,7 +438,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       if (colP.notNull || colP.checks.nonEmpty || colP.unique)
         throw new UserException(
           "Adding columns with constraints not yet supported")
-      val existing = spark.table(s"`$sanitized`")
       if (existing.columns.exists(_.equalsIgnoreCase(colP.name))) {
         if (ifNotExists == null)
           throw new UserException(
@@ -440,134 +449,73 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         // persists for future partial-column inserts
         val value = colP.default.map(d => expr(d).cast(dt))
           .getOrElse(lit(null).cast(dt))
-        colP.default.foreach { d =>
-          tableDefaults.put(key, tableDefaults.getOrElse(key, Map.empty) +
-            (colP.name.toLowerCase -> d))
-        }
-        register(name, materialize(name, existing.withColumn(colP.name, value)))
-        rebind(key)
+        colP.default.foreach(d => updateMeta(sanitized.toLowerCase)(m =>
+          m.copy(defaults = m.defaults + (colP.name.toLowerCase -> d))))
+        writeTable(name, existing.withColumn(colP.name, value))
       }
 
     case dropColStmt(name, ifExists, colName0) =>
-      val sanitized = Names.view(name)
-      val key = sanitized.toLowerCase
-      if (!spark.catalog.tableExists(s"`$sanitized`"))
-        throw new UserException(
-          s"ALTER TABLE ... DROP COLUMN: $name does not exist")
-      val existing = spark.table(s"`$sanitized`")
+      val (sanitized, existing) = alterTarget(name, "DROP COLUMN")
       existing.columns.find(_.equalsIgnoreCase(colName0)) match {
         case None =>
-          if (ifExists == null) throw new UserException(
-            s"""Binder Error: Table "$sanitized" does not have a column """ +
-              s"""with name "$colName0"""")
+          if (ifExists == null) throw noColumn(sanitized, colName0)
         case Some(c) =>
-          // probed v1.0: PK/UNIQUE and CHECK dependencies block the drop
-          val inKey = declaredPk.get(key).exists(_.exists(_.equalsIgnoreCase(c))) ||
-            indexNames.values.exists { case (t, cols) =>
-              t == key && cols.exists(_.equalsIgnoreCase(c)) }
-          if (inKey) throw new UserException(
+          guardColumnDeps(sanitized.toLowerCase, c,
             s"""Cannot drop column "$c" because there is a UNIQUE """ +
+              "constraint that depends on it",
+            s"""Cannot drop column "$c" because there is a CHECK """ +
               "constraint that depends on it")
-          val depRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-          if (tableChecks.getOrElse(key, Nil)
-              .exists(ck => depRe.findFirstIn(ck).isDefined))
-            throw new UserException(
-              s"""Cannot drop column "$c" because there is a CHECK """ +
-                "constraint that depends on it")
-          tableDefaults.get(key).foreach(m =>
-            tableDefaults.put(key, m - c.toLowerCase))
-          tableNotNull.get(key).foreach(l =>
-            tableNotNull.put(key, l.filterNot(_.equalsIgnoreCase(c))))
-          register(name, materialize(name, existing.drop(c)))
-          rebind(key)
+          updateMeta(sanitized.toLowerCase)(_.dropColumn(c))
+          writeTable(name, existing.drop(c))
       }
 
     case renameColStmt(name, from, to) =>
-      val sanitized = Names.view(name)
+      val (sanitized, existing) = alterTarget(name, "RENAME COLUMN")
       val key = sanitized.toLowerCase
-      if (!spark.catalog.tableExists(s"`$sanitized`"))
-        throw new UserException(
-          s"ALTER TABLE ... RENAME COLUMN: $name does not exist")
-      val existing = spark.table(s"`$sanitized`")
-      val c = existing.columns.find(_.equalsIgnoreCase(from)).getOrElse(
-        throw new UserException(
-          s"""Binder Error: Table "$sanitized" does not have a column """ +
-            s"""with name "$from""""))
+      val c = existing.columns.find(_.equalsIgnoreCase(from))
+        .getOrElse(throw noColumn(sanitized, from))
       if (existing.columns.exists(_.equalsIgnoreCase(to)))
         throw new UserException(
           s"Catalog Error: Column with name $to already exists!")
-      // every registry follows the rename (probed: a CHECK referencing
-      // the column renames WITH it; PK columns rename in place)
-      declaredPk.get(key).foreach(ks => declaredPk.put(key,
-        ks.map(k => if (k.equalsIgnoreCase(c)) to else k)))
+      // every registry follows the rename
+      updateMeta(key)(_.renameColumn(c, to))
       indexNames.toSeq.foreach { case (n, (t, cols)) =>
         if (t == key && cols.exists(_.equalsIgnoreCase(c)))
           indexNames.put(n,
             (t, cols.map(k => if (k.equalsIgnoreCase(c)) to else k)))
       }
-      tableDefaults.get(key).foreach { m =>
-        m.get(c.toLowerCase).foreach(d =>
-          tableDefaults.put(key, m - c.toLowerCase + (to.toLowerCase -> d)))
-      }
-      tableNotNull.get(key).foreach(l => tableNotNull.put(key,
-        l.map(k => if (k.equalsIgnoreCase(c)) to else k)))
-      val renRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-      tableChecks.get(key).foreach(l => tableChecks.put(key, l.map(ck =>
-        renRe.replaceAllIn(ck,
-          java.util.regex.Matcher.quoteReplacement(to)))))
-      register(name, materialize(name, existing.withColumnRenamed(c, to)))
-      rebind(key)
+      writeTable(name, existing.withColumnRenamed(c, to))
 
     case alterColStmt(name, colName0, action) =>
-      val sanitized = Names.view(name)
+      val (sanitized, existing) = alterTarget(name, "ALTER COLUMN")
       val key = sanitized.toLowerCase
-      if (!spark.catalog.tableExists(s"`$sanitized`"))
-        throw new UserException(
-          s"ALTER TABLE ... ALTER COLUMN: $name does not exist")
-      val existing = spark.table(s"`$sanitized`")
-      val c = existing.columns.find(_.equalsIgnoreCase(colName0)).getOrElse(
-        throw new UserException(
-          s"""Binder Error: Table "$sanitized" does not have a column """ +
-            s"""with name "$colName0""""))
+      val c = existing.columns.find(_.equalsIgnoreCase(colName0))
+        .getOrElse(throw noColumn(sanitized, colName0))
       val typeRe = "(?is)^(?:SET\\s+DATA\\s+)?TYPE\\s+(.+?)(?:\\s+USING\\s+(.+))?$".r
       action.trim match {
         case typeRe(typeText, usingTxt) =>
           // probed v1.0: retype of a PK/UNIQUE or CHECK-referenced
           // column is a binder error; DEFAULT and NOT NULL survive
-          val inKey = declaredPk.get(key).exists(_.exists(_.equalsIgnoreCase(c))) ||
-            indexNames.values.exists { case (t, cols) =>
-              t == key && cols.exists(_.equalsIgnoreCase(c)) }
-          if (inKey) throw new UserException(
+          guardColumnDeps(key, c,
             "Binder Error: Cannot change the type of a column that has " +
-              "a UNIQUE or PRIMARY KEY constraint specified")
-          val depRe = ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
-          if (tableChecks.getOrElse(key, Nil)
-              .exists(ck => depRe.findFirstIn(ck).isDefined))
-            throw new UserException(
-              "Binder Error: Cannot change the type of a column that " +
-                "has a CHECK constraint specified")
-          val dt = parseTypeText(typeText)
+              "a UNIQUE or PRIMARY KEY constraint specified",
+            "Binder Error: Cannot change the type of a column that " +
+              "has a CHECK constraint specified")
           val src = Option(usingTxt).map(expr).getOrElse(col(s"`$c`"))
-          register(name,
-            materialize(name, existing.withColumn(c, src.cast(dt))))
-          rebind(key)
+          writeTable(name, existing.withColumn(c, src.cast(parseTypeText(typeText))))
         case a if "(?is)^SET\\s+DEFAULT\\s+.+$".r.findFirstIn(a).isDefined =>
           val d = a.replaceFirst("(?is)^SET\\s+DEFAULT\\s+", "").trim
-          tableDefaults.put(key, tableDefaults.getOrElse(key, Map.empty) +
-            (c.toLowerCase -> d))
+          updateMeta(key)(m => m.copy(defaults = m.defaults + (c.toLowerCase -> d)))
         case a if "(?is)^DROP\\s+DEFAULT$".r.findFirstIn(a).isDefined =>
-          tableDefaults.get(key).foreach(m =>
-            tableDefaults.put(key, m - c.toLowerCase))
+          updateMeta(key)(m => m.copy(defaults = m.defaults - c.toLowerCase))
         case a if "(?is)^SET\\s+NOT\\s+NULL$".r.findFirstIn(a).isDefined =>
           // probed: existing NULLs fail the constraint at SET time
           if (existing.filter(col(s"`$c`").isNull).limit(1).collect().nonEmpty)
             throw new UserException(
               s"NOT NULL constraint failed: $sanitized.$c")
-          tableNotNull.put(key,
-            (tableNotNull.getOrElse(key, Nil) :+ c).distinct)
+          updateMeta(key)(m => m.copy(notNull = (m.notNull :+ c).distinct))
         case a if "(?is)^DROP\\s+NOT\\s+NULL$".r.findFirstIn(a).isDefined =>
-          tableNotNull.get(key).foreach(l =>
-            tableNotNull.put(key, l.filterNot(_.equalsIgnoreCase(c))))
+          updateMeta(key)(m => m.copy(notNull = m.notNull.filterNot(_.equalsIgnoreCase(c))))
         case other =>
           throw new UserException(
             s"unsupported ALTER COLUMN action: $other — supported: " +
@@ -585,14 +533,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         // dir — left under the old name, a later CREATE TABLE of that
         // name would overwrite the renamed table's data
         val srcDir = java.nio.file.Paths.get(warehouseDir, src)
-        if (java.nio.file.Files.isDirectory(srcDir)) {
-          val dstDir = java.nio.file.Paths.get(warehouseDir, Names.view(to))
-          if (java.nio.file.Files.exists(dstDir)) deleteRecursively(dstDir)
-          java.nio.file.Files.move(srcDir, dstDir)
-          register(to, spark.read.parquet(dstDir.toString))
-        } else {
-          register(to, spark.table(s"`$src`")) // view: same analyzed plan
-        }
+        val moved =
+          if (java.nio.file.Files.isDirectory(srcDir)) {
+            val dstDir = java.nio.file.Paths.get(warehouseDir, Names.view(to))
+            if (java.nio.file.Files.exists(dstDir)) deleteRecursively(dstDir)
+            java.nio.file.Files.move(srcDir, dstDir)
+            spark.read.parquet(dstDir.toString)
+          } else spark.table(s"`$src`") // view: same analyzed plan
+        moved.createOrReplaceTempView(Names.view(to))
         spark.catalog.dropTempView(src)
         renameTableMeta(src.toLowerCase, Names.view(to).toLowerCase)
         viewDefs.synchronized {
@@ -630,11 +578,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       if (!existed && ifExists == null)
         throw new UserException(
           s"DROP ${kind.toUpperCase}: $name does not exist")
-      if (existed) {
-        spark.catalog.dropTempView(sanitized)
-        viewDefs.synchronized { viewDefs.remove(sanitized.toLowerCase) }
-        clearTableMeta(sanitized.toLowerCase)
-      }
+      if (existed) dropObject(sanitized)
 
     case _ if UpsertSql.parse(stmt).isDefined =>
       // probed v1.0 RETURNING semantics: every PROPOSED row, verbatim —
@@ -679,8 +623,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // (possibly nondeterministic) source to one evaluation
       val aligned = if (returning.isDefined) aligned0.localCheckpoint()
                     else aligned0
-      register(name, materialize(name, existing.unionByName(aligned)))
-      rebind(Names.view(name).toLowerCase)
+      writeTable(name, existing.unionByName(aligned))
       delta = Some(aligned)
 
     case _ if ExportDb.parseExport(stmt).isDefined =>
@@ -799,22 +742,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         if (addedCols(c.toLowerCase)) col(c).cast(existing.schema(c).dataType).as(c)
         else lit(null).cast(existing.schema(c).dataType).as(c)
       }: _*)
-      register(p.target, materialize(p.target, existing.unionByName(aligned)))
-      rebind(Names.view(p.target).toLowerCase)
-
-    case _ if Pivot.parse(stmt).isDefined || AsOfSql.parse(stmt).isDefined ||
-        UnionByNameSql.parse(stmt).isDefined || StarReplaceSql.has(stmt) ||
-        DescribeSql.parse(stmt).isDefined || ColumnsSql.has(stmt) ||
-        StarRenameSql.has(stmt) || StarReplaceSql.hasQualifiedLike(stmt) ||
-        PositionalSql.parse(stmt).isDefined =>
-      // bare PIVOT / ASOF / POSITIONAL / UNION BY NAME / star REPLACE /
-      // DESCRIBE / SUMMARIZE: execute for effect + errors
-      bodyDf(stmt).queryExecution.assertAnalyzed()
+      writeTable(p.target, existing.unionByName(aligned))
 
     case _ =>
-      val plan = spark.sessionState.sqlParser.parsePlan(stmt)
-      plan.getClass.getSimpleName match {
-        case "DeleteFromTable" =>
+      scala.util.Try(spark.sessionState.sqlParser.parsePlan(stmt)).toOption match {
+        case Some(plan) if plan.getClass.getSimpleName == "DeleteFromTable" =>
           val name = targetName(plan)
           val cond = plan.productIterator.collectFirst {
             case e: org.apache.spark.sql.catalyst.expressions.Expression => e
@@ -833,10 +765,9 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               coalesce(GraftSqlBridge.column(e), lit(false))).getOrElse(lit(true))
             delta = Some(df.filter(hit).localCheckpoint())
           }
-          register(name, materialize(name, out))
-          rebind(Names.view(name).toLowerCase)
+          writeTable(name, out)
 
-        case "UpdateTable" =>
+        case Some(plan) if plan.getClass.getSimpleName == "UpdateTable" =>
           val name = targetName(plan)
           val df = spark.table(s"`${Names.view(name)}`")
           val (assigns, cond) = updateParts(plan)
@@ -855,7 +786,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               case None => col(c)
             }
           }
-          if (returning.isDefined) {
+          writeTable(name, if (returning.isDefined) {
             // RETURNING must observe the WRITTEN rows: a nondeterministic
             // SET (nextval(), uuidv7(), random()) evaluated once for the
             // table and again for the delta would return rows that were
@@ -868,15 +799,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
             val pinned = df.select(outCols :+ hit.as("__upd_ret_hit"): _*)
               .localCheckpoint()
             delta = Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-            register(name, materialize(name, pinned.drop("__upd_ret_hit")))
-          } else {
-            register(name, materialize(name, df.select(outCols: _*)))
-          }
-          rebind(Names.view(name).toLowerCase)
+            pinned.drop("__upd_ret_hit")
+          } else df.select(outCols: _*))
 
         case _ =>
-          // plain SELECT / SET / etc.: execute for effect + error surfacing
-          spark.sql(stmt).queryExecution.assertAnalyzed()
+          // every other statement — SELECT / SET / EXPLAIN, and the bare
+          // PIVOT / ASOF / DESCRIBE / ... forms Spark cannot parse — runs
+          // through bodyDf once, for effect + error surfacing
+          bodyDf(stmt).queryExecution.assertAnalyzed()
       }
     }
     returning.map { proj =>
@@ -886,7 +816,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           "IGNORE upsert forms)"))
       // a MERGE delta carries the 1.4 `merge_action` pseudo-column: it is
       // addressable by name but NOT part of `*` (spec-pinned 1.4 rule)
-      val exprs = ReturningSql.projExprs(proj).flatMap {
+      val exprs = Dialect.splitTop(proj).flatMap {
         case "*" if d.columns.contains("merge_action") =>
           d.columns.filter(_ != "merge_action").map(c => s"`$c`")
         case e => Seq(e)
@@ -957,25 +887,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
   }
 
-  /** Index of the ')' matching the '(' at `open`, skipping quoted regions. */
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var quote: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '('         => depth += 1
-        case ')'         => depth -= 1; if (depth == 0) return i
-        case _           =>
-      }
-      i += 1
-    }
-    throw new UserException(s"unbalanced parentheses in INSERT: $s")
-  }
-
   private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
     plan.collectFirst {
       case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
@@ -993,7 +904,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         assigns = s.collect {
           case a if a.getClass.getSimpleName == "Assignment" =>
             val it = a.asInstanceOf[Product].productIterator.toList
-            (it.head.asInstanceOf[Expression].sql.stripPrefix("`").stripSuffix("`"),
+            (Dialect.unquote(it.head.asInstanceOf[Expression].sql),
               it(1).asInstanceOf[Expression])
         }
       case Some(e: Expression) => cond = Some(e)
@@ -1004,44 +915,53 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
 
   private val version = new java.util.concurrent.atomic.AtomicLong()
 
-  /** CREATE TABLE semantics: persist to the warehouse dir (parquet) and
-    * return the read-back frame — cuts lineage, survives into the next
-    * run's input (A11 database passthrough). Writes stage into a fresh
-    * directory and swap in afterwards: INSERT/UPDATE/DELETE re-derivations
-    * READ the current files of the same table while writing the new state,
-    * so an in-place overwrite would consume its own deletes. */
   /** NOT NULL / CHECK enforcement riding the write pass: assert_true
     * filters evaluate per row DURING materialization (no extra scan),
     * raising the DuckDB-shaped constraint message on violation. A NULL
     * check result passes (the standard's rule, probed v1.0). */
-  private def enforced(name: String, df: DataFrame): DataFrame = {
-    val key = Names.view(name).toLowerCase
+  private def enforced(key: String, df: DataFrame): DataFrame = {
     val present = df.columns.map(_.toLowerCase).toSet
-    var out = df
-    tableNotNull.getOrElse(key, Nil)
-      .filter(c => present(c.toLowerCase)).foreach { c =>
-        out = out.filter(expr(
-          s"assert_true(`$c` IS NOT NULL, " +
-            s"'NOT NULL constraint failed: $key.$c') IS NULL"))
-      }
-    tableChecks.getOrElse(key, Nil).foreach { ck =>
-      out = out.filter(expr(
-        s"assert_true(coalesce(CAST(($ck) AS BOOLEAN), true), " +
-          s"'CHECK constraint failed: $key') IS NULL"))
-    }
-    out
+    val m = meta(key)
+    val notNull = m.notNull.filter(c => present(c.toLowerCase)).map(c =>
+      s"assert_true(`$c` IS NOT NULL, 'NOT NULL constraint failed: $key.$c') IS NULL")
+    val checks = m.checks.map(ck =>
+      s"assert_true(coalesce(CAST(($ck) AS BOOLEAN), true), " +
+        s"'CHECK constraint failed: $key') IS NULL")
+    (notNull ++ checks).foldLeft(df)((out, p) => out.filter(expr(p)))
   }
 
-  private def materialize(name: String, df0: DataFrame): DataFrame = {
+  /** THE table write — every CREATE TABLE, ALTER and DML statement ends
+    * here: enforce NOT NULL / CHECK → stage → swap → register → rebind
+    * dependent views. The table persists to the warehouse dir (parquet)
+    * and registers the read-back frame, which cuts lineage and survives
+    * into the next run's input (A11 database passthrough). Writes stage
+    * into a fresh directory and swap in afterwards: INSERT/UPDATE/DELETE
+    * re-derivations READ the current files of the same table while
+    * writing the new state, so an in-place overwrite would consume its
+    * own deletes. */
+  private def writeTable(name: String, df: DataFrame): Unit = {
     import java.nio.file.{Files, Paths}
-    val df = enforced(name, df0)
-    val dir = Paths.get(warehouseDir, Names.view(name))
+    val sanitized = Names.view(name)
+    val dir = Paths.get(warehouseDir, sanitized)
     val staging = Paths.get(warehouseDir,
-      s".staging_${Names.view(name)}_${version.incrementAndGet()}")
-    df.write.mode("overwrite").parquet(staging.toString)
+      s".staging_${sanitized}_${version.incrementAndGet()}")
+    enforced(sanitized.toLowerCase, df).write.mode("overwrite").parquet(staging.toString)
     if (Files.exists(dir)) deleteRecursively(dir) // replace previous state
     Files.move(staging, dir)
-    spark.read.parquet(dir.toString)
+    spark.read.parquet(dir.toString).createOrReplaceTempView(sanitized)
+    rebind(sanitized.toLowerCase)
+  }
+
+  /** THE table/view drop: the registration, a table's warehouse files,
+    * its key metadata and a view's definition. Files left behind would
+    * come back through EXPORT DATABASE and the next run's warehouse
+    * passthrough. */
+  private def dropObject(sanitized: String): Unit = {
+    spark.catalog.dropTempView(sanitized)
+    val dir = java.nio.file.Paths.get(warehouseDir, sanitized)
+    if (java.nio.file.Files.isDirectory(dir)) deleteRecursively(dir)
+    viewDefs.synchronized { viewDefs.remove(sanitized.toLowerCase) }
+    clearTableMeta(sanitized.toLowerCase)
   }
 
   /** Depth-first delete; the walk stream is CLOSED (an unclosed
@@ -1085,9 +1005,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     out.toString
   }
 
-  private def register(name: String, df: DataFrame): Unit =
-    df.createOrReplaceTempView(Names.view(name))
-
   /** Parse an INSERT tail (`[BY NAME] [(col list)] <source>`) and return
     * (target's current state, incoming rows aligned to the target's
     * schema) — the shared front half of plain INSERT and the upserts.
@@ -1109,15 +1026,16 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       "(?is)^BY\\s+NAME\\s*".r.replaceFirstIn(rest2, "") else rest2
     val (colList, body) =
       if (rest.startsWith("(")) {
-        val close = matchingParen(rest, 0)
+        val close = Dialect.matchingParen(Dialect.maskQuoted(rest), 0)
+        if (close < 0)
+          throw new UserException(s"unbalanced parentheses in INSERT: $rest")
         val inner = rest.substring(1, close).trim
         val firstWord = inner.split("[\\s(]", 2).head.toUpperCase
         if (Set("SELECT", "WITH", "VALUES", "FROM", "TABLE")(firstWord)) (null, rest)
         else (inner, rest.substring(close + 1).trim)
       } else (null, rest)
     val existing = spark.table(s"`${Names.view(name)}`")
-    val defaults = tableDefaults.getOrElse(Names.view(name).toLowerCase,
-      Map.empty[String, String])
+    val defaults = meta(Names.view(name).toLowerCase).defaults
     // the DEFAULT keyword inside VALUES rows draws the declared default
     // (NULL when none — probed v1.0); position maps through the column
     // list when present, table order otherwise
@@ -1126,7 +1044,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           !"(?i)\\bDEFAULT\\b".r.findFirstIn(Dialect.maskQuoted(body)).isDefined) body
       else {
         val order: Array[String] = Option(colList).filter(_.trim.nonEmpty)
-          .map(_.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")))
+          .map(Dialect.splitTop(_).map(Dialect.unquote).toArray)
           .getOrElse(existing.columns)
         val masked = Dialect.maskQuoted(body)
         val dep = Dialect.depths(masked)
@@ -1153,7 +1071,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
     val added0 = bodyDf(body1)
     val added = Option(colList).filter(_.trim.nonEmpty) match {
-      case Some(cs) => added0.toDF(cs.split(",").map(_.trim.stripPrefix("`").stripSuffix("`")): _*)
+      case Some(cs) => added0.toDF(Dialect.splitTop(cs).map(Dialect.unquote): _*)
       case None if byName =>
         // DuckDB errors on source columns absent from the target —
         // silently dropping them would lose a typoed column's data
@@ -1222,18 +1140,16 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     // uuidv7(), random()) and return rows that differ from the written
     // ones — the same single-eval pin as INSERT/upsert/plain UPDATE.
     // Also pinned BEFORE the swap deletes the old files it reads.
-    val delta = if (wantDelta) {
+    if (wantDelta) {
       val pinned = one.select(projCols :+
         coalesce(col("__upd_hit"), lit(false)).as("__upd_ret_hit"): _*)
         .localCheckpoint()
-      register(u.target, materialize(u.target, pinned.drop("__upd_ret_hit")))
+      writeTable(u.target, pinned.drop("__upd_ret_hit"))
       Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
     } else {
-      register(u.target, materialize(u.target, one.select(projCols: _*)))
+      writeTable(u.target, one.select(projCols: _*))
       None
     }
-    rebind(sanitized.toLowerCase)
-    delta
   }
 
   /** `DELETE ... USING` re-derivation — an anti-join of the target
@@ -1255,8 +1171,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       Some(existing.alias(tAlias)
         .join(src.alias(sAlias), expr(u.where), "left_semi").localCheckpoint())
     else None
-    register(u.target, materialize(u.target, kept))
-    rebind(sanitized.toLowerCase)
+    writeTable(u.target, kept)
     delta
   }
 
@@ -1464,8 +1379,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       case Some(r) => keptTgt.unionByName(r)
       case None => keptTgt
     }
-    register(m.target, materialize(m.target, newState))
-    rebind(sanitized.toLowerCase)
+    writeTable(m.target, newState)
 
     if (!wantDelta) None
     else {
@@ -1590,8 +1504,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           }
         }: _*).unionByName(fresh)
     }
-    register(name, materialize(name, result))
-    rebind(sanitized.toLowerCase)
+    writeTable(name, result)
     aligned
   }
 
@@ -1635,21 +1548,20 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       val df = spark.read.parquet(Paths.get(warehouseDir, t).toString)
       // DEFAULT / NOT NULL ride the column defs so a replay keeps the
       // insert-time behavior, not just the shape
-      val defs = tableDefaults.getOrElse(t.toLowerCase, Map.empty)
-      val nns = tableNotNull.getOrElse(t.toLowerCase, Nil)
-        .map(_.toLowerCase).toSet
+      val m = meta(t.toLowerCase)
+      val nns = m.notNull.map(_.toLowerCase).toSet
       val cols = df.schema.fields.map { f =>
         s"${ident(f.name)} ${sqlTypeOf(f.dataType)}" +
-          defs.get(f.name.toLowerCase).map(v => s" DEFAULT $v").getOrElse("") +
+          m.defaults.get(f.name.toLowerCase).map(v => s" DEFAULT $v").getOrElse("") +
           (if (nns(f.name.toLowerCase)) " NOT NULL" else "")
       }.mkString(", ")
       // the declared PRIMARY KEY is upsert-conflict-target state: it must
       // survive the replay (the table-level spelling, re-extracted by the
       // bare-DDL import path)
-      val pk = declaredPk.get(t.toLowerCase)
+      val pk = Some(m.pk).filter(_.nonEmpty)
         .map(ks => s", PRIMARY KEY (${ks.map(ident).mkString(", ")})")
         .getOrElse("")
-      val cks = tableChecks.getOrElse(t.toLowerCase, Nil)
+      val cks = m.checks
         .map(c => s", CHECK ($c)").mkString
       schema.append(s"CREATE TABLE ${ident(t)}($cols$pk$cks);\n")
       val dataPath = out.resolve(s"$t.${e.format.toLowerCase}").toString
@@ -1657,19 +1569,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         df.write.mode("overwrite").parquet(dataPath)
         load.append(s"COPY ${ident(t)} FROM '$dataPath' (FORMAT 'parquet');\n")
       } else {
-        // enum columns write their LABELS to CSV (the probed DuckDB
-        // rendering; structs are unwritable there anyway) — the loader's
-        // COPY FROM re-encodes through the VARCHAR→enum cast
-        val csvDf =
-          if (df.schema.exists(f =>
-            graft.functions.EnumExprs.enumNameOf(f.dataType).isDefined))
-            df.select(df.schema.fields.map { f =>
-              if (graft.functions.EnumExprs.enumNameOf(f.dataType).isDefined)
-                df.col(s"`${f.name}`").cast("string").as(f.name)
-              else df.col(s"`${f.name}`")
-            }.toIndexedSeq: _*)
-          else df
-        csvDf.write.mode("overwrite").option("header", "true")
+        // enum columns write their LABELS to CSV (structs are unwritable
+        // there anyway) — the loader's COPY FROM re-encodes through the
+        // VARCHAR→enum cast
+        Export.enumLabels(df).write.mode("overwrite").option("header", "true")
           .option("nullValue", "\\N")
           .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
           .option("dateFormat", "yyyy-MM-dd")

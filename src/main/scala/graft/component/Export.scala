@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructField
 
 /** Output export (reference A6–A10, `src/component.py:155-182`): each
   * output-mapping table is written as ONE CSV file with header and every
@@ -41,23 +42,24 @@ object Export {
   }
 
   def exportTable(spark: SparkSession, dataDir: String, out: OutputTable): Unit = {
-    val df0 = spark.table(s"`${Names.view(out.source)}`")
-    // ENUM columns export as their LABELS (probed v1.0: COPY TO csv
-    // writes `ok`, not an index) — the cast-to-string lowers through
-    // DuckEnumRule's decode; every other column is untouched
-    val df =
-      if (df0.schema.exists(f =>
-        graft.functions.EnumExprs.enumNameOf(f.dataType).isDefined))
-        df0.select(df0.schema.fields.map { f =>
-          if (graft.functions.EnumExprs.enumNameOf(f.dataType).isDefined)
-            df0.col(s"`${f.name}`").cast("string").as(f.name)
-          else df0.col(s"`${f.name}`")
-        }.toIndexedSeq: _*)
-      else df0
+    val df = enumLabels(spark.table(s"`${Names.view(out.source)}`"))
     val dest = Paths.get(dataDir, "out", "tables", out.source)
     writeSingleCsv(df, dest)
     Manifest.writeOutput(
       Paths.get(dataDir, "out", "tables", out.source + ".manifest"), out, df.schema)
+  }
+
+  /** ENUM columns as their LABELS (probed v1.0: COPY TO csv writes `ok`,
+    * not an index) — the cast-to-string lowers through DuckEnumRule's
+    * decode; every other column is untouched. */
+  private[component] def enumLabels(df: DataFrame): DataFrame = {
+    def isEnum(f: StructField) =
+      graft.functions.EnumExprs.enumNameOf(f.dataType).isDefined
+    if (!df.schema.exists(isEnum)) df
+    else df.select(df.schema.fields.toIndexedSeq.map { f =>
+      if (isEnum(f)) df.col(s"`${f.name}`").cast("string").as(f.name)
+      else df.col(s"`${f.name}`")
+    }: _*)
   }
 
   /** Single CSV file, header row, all fields quoted — byte-compatible with
@@ -66,7 +68,7 @@ object Export {
     * emits a header from a non-empty partition, while the reference writes
     * one for empty results too (every golden fixture of the heavy
     * `sync_action_execution_plan` case is a header-only file). */
-  def writeSingleCsv(df: org.apache.spark.sql.DataFrame, dest: Path): Unit = {
+  def writeSingleCsv(df: DataFrame, dest: Path): Unit = {
     val tmp = Files.createTempDirectory("graft_csv_")
     val stage = tmp.resolve("stage").toString
     df.coalesce(1).write

@@ -86,42 +86,15 @@ object FileReads {
     }
   }
 
-  private def unquote(s0: String): String = {
-    val s = s0.trim
-    if (s.length >= 2 && s.head == '\'' && s.last == '\'')
-      s.substring(1, s.length - 1).replace("''", "'")
-    else s
-  }
-
   private def register(fn: String, argsStr: String): String = {
-    val masked = Dialect.maskQuoted(argsStr)
-    // depth-0 comma split of the argument list
-    // depth-0 across (), [] AND {} — `columns={'a': 'INT'}` carries
-    // commas inside braces that must not split the argument list
-    val cuts = {
-      val out = scala.collection.mutable.ArrayBuffer[Int]()
-      var d = 0
-      var i = 0
-      while (i < masked.length) {
-        masked.charAt(i) match {
-          case '(' | '[' | '{' => d += 1
-          case ')' | ']' | '}' => d -= 1
-          case ',' if d == 0 => out += i
-          case _ =>
-        }
-        i += 1
-      }
-      out.toSeq
-    }
-    val pieces = (Seq(-1) ++ cuts :+ argsStr.length).sliding(2).map {
-      case Seq(a, b) => argsStr.substring(a + 1, b).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toList
+    // `columns={'a': 'INT'}` carries commas inside braces that must not
+    // split the argument list
+    val pieces = Dialect.splitTop(argsStr)
     val paths: Seq[String] = pieces.headOption.map(_.trim) match {
       case Some(p) if p.startsWith("[") =>
         val inner = p.stripPrefix("[").stripSuffix("]")
-        inner.split(",").map(unquote).filter(_.nonEmpty).toSeq
-      case Some(p) => Seq(unquote(p))
+        inner.split(",").map(Dialect.unquote).filter(_.nonEmpty).toSeq
+      case Some(p) => Seq(Dialect.unquote(p))
       case None => Nil
     }
     val format = fn match {
@@ -132,7 +105,7 @@ object FileReads {
     }
     val named = pieces.drop(1).flatMap { p =>
       "(?s)^\\s*([A-Za-z_]+)\\s*=\\s*(.*)$".r.findFirstMatchIn(p)
-        .map(g => g.group(1).toLowerCase -> unquote(g.group(2)))
+        .map(g => g.group(1).toLowerCase -> Dialect.unquote(g.group(2)))
     }.toMap
     val options: Map[String, String] = format match {
       case "csv" =>

@@ -24,24 +24,18 @@ object IndexSql {
   private val dropRe =
     "(?is)^\\s*DROP\\s+INDEX\\s+(IF\\s+EXISTS\\s+)?([A-Za-z_]\\w*|\"[^\"]+\"|`[^`]+`)\\s*;?\\s*$".r
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("\"") && t.endsWith("\"")) ||
-      (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
-    else t
-  }
-
   def parseCreate(stmt: String): Option[Create] =
     createRe.findFirstMatchIn(stmt).map { m =>
-      Create(unq(m.group(3)), unique = m.group(1) != null, unq(m.group(4)),
-        m.group(5).split(",").map(unq).toSeq, ifNotExists = m.group(2) != null)
+      Create(Dialect.unquote(m.group(3)), unique = m.group(1) != null,
+        Dialect.unquote(m.group(4)), m.group(5).split(",").map(Dialect.unquote).toSeq,
+        ifNotExists = m.group(2) != null)
     }
 
   final case class Drop(name: String, ifExists: Boolean)
 
   def parseDrop(stmt: String): Option[Drop] =
     dropRe.findFirstMatchIn(stmt).map(m =>
-      Drop(unq(m.group(2)), ifExists = m.group(1) != null))
+      Drop(Dialect.unquote(m.group(2)), ifExists = m.group(1) != null))
 
   /** Static-analysis twin: parseable, inert (an index never changes a
     * result set or the DAG). ALTER TABLE ... ADD PRIMARY KEY (DuckDB

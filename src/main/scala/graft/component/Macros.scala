@@ -189,6 +189,8 @@ object Macros {
     body
   }
 
+  // kept apart from Dialect.splitTop: empty pieces stay, so `f(a,,b)`
+  // fails the arity check instead of binding as `f(a, b)`
   private def splitTop(s: String): Seq[String] = {
     if (s.trim.isEmpty) return Nil
     val masked = Dialect.maskQuoted(s)

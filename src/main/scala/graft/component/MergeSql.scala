@@ -58,18 +58,11 @@ object MergeSql {
     ("(?is)^\\s*MERGE\\s+INTO\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
       "(?:\\s+(?:AS\\s+)?(?!USING\\b)([A-Za-z_]\\w*))?\\s+USING\\s+").r
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("\"") && t.endsWith("\"")) ||
-      (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
-    else t
-  }
-
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
     val hm = head.findFirstMatchIn(masked).getOrElse(return None)
-    val target = unq(stmt.substring(hm.start(1), hm.end(1)))
+    val target = Dialect.unquote(stmt.substring(hm.start(1), hm.end(1)))
     val alias = Option(hm.group(2))
     val rest = stmt.substring(hm.end)
     val rm = Dialect.maskQuoted(rest)
@@ -142,11 +135,11 @@ object MergeSql {
     if ("(?is)^UPDATE\\s+SET\\s".r.findFirstIn(masked).isDefined) {
       val setsTxt = txt.substring(
         "(?is)^UPDATE\\s+SET\\s".r.findFirstMatchIn(masked).get.end - 1)
-      val sets = splitTop(setsTxt).map { a =>
+      val sets = Dialect.splitTop(setsTxt).map { a =>
         val eq = Dialect.maskQuoted(a).indexOf('=')
         if (eq < 0) throw new UserException(
           s"MERGE INTO: UPDATE SET needs col = expr: $a")
-        (unq(a.substring(0, eq).trim.split("\\.").last),
+        (Dialect.unquote(a.substring(0, eq).trim.split("\\.").last),
           a.substring(eq + 1).trim)
       }
       if (sets.isEmpty) throw new UserException(
@@ -182,7 +175,7 @@ object MergeSql {
           if (close < 0) throw new UserException(
             s"MERGE INTO: unbalanced INSERT column list: $txt")
           cols = Some(afterIns.substring(i + 1, close).split(",")
-            .map(c => unq(c.trim)).toSeq)
+            .map(c => Dialect.unquote(c.trim)).toSeq)
           i = close + 1
         }
         val vm = "(?is)^\\s*VALUES\\s*\\(".r
@@ -196,7 +189,7 @@ object MergeSql {
         if (tail.nonEmpty) throw new UserException(
           "MERGE INTO: INSERT takes ONE VALUES row per source row " +
             s"(unexpected trailing text: ${afterIns.substring(close + 1).trim})")
-        val values = splitTop(afterIns.substring(open + 1, close))
+        val values = Dialect.splitTop(afterIns.substring(open + 1, close))
         cols.foreach { cs =>
           if (cs.length != values.length) throw new UserException(
             s"MERGE INTO: INSERT column list has ${cs.length} names but " +
@@ -227,18 +220,6 @@ object MergeSql {
         case _ => ()
       }
     }
-
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
-  }
 
   /** When the ON condition is a pure conjunction of `t.a = s.b` equi
     * pairs (bare identifiers, each side qualified by one alias), the

@@ -85,16 +85,12 @@ object Pivot {
     val groupCols = if (groupPos < 0) None else {
       val byM = "(?is)^GROUP\\s+BY\\b".r
         .findFirstMatchIn(stmt.substring(groupPos)).getOrElse(return None)
-      Some(stmt.substring(groupPos + byM.end).split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")
-          .stripPrefix("`").stripSuffix("`")).filter(_.nonEmpty))
+      Some(Dialect.splitTop(stmt.substring(groupPos + byM.end))
+        .map(Dialect.unquote).filter(_.nonEmpty))
     }
-    Some(Parsed(src, stripIdentQuotes(on), aggM.group(1), aggM.group(2).trim,
+    Some(Parsed(src, Dialect.unquote(on), aggM.group(1), aggM.group(2).trim,
       groupCols))
   }
-
-  private def stripIdentQuotes(s: String): String =
-    s.stripPrefix("\"").stripSuffix("\"").stripPrefix("`").stripSuffix("`")
 
   /** Strip ONE fully-wrapping paren pair (`CREATE VIEW v AS (PIVOT ...)`). */
   private def unwrap(stmt0: String): String = {
@@ -193,8 +189,8 @@ object Pivot {
       "([^\\s]+)\\s+VALUE\\s+([^\\s;]+)\\s*$").r.findFirstMatchIn(tail)
       .getOrElse(return stmt)
     val (src, cols, n, v) =
-      (tm.group(1), tm.group(2), stripIdentQuotes(tm.group(3)),
-        stripIdentQuotes(tm.group(4)))
+      (tm.group(1), tm.group(2), Dialect.unquote(tm.group(3)),
+        Dialect.unquote(tm.group(4)))
     stmt.substring(0, start) +
       s"SELECT * FROM $src UNPIVOT (`$v` FOR `$n` IN ($cols))"
   }

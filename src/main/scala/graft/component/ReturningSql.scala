@@ -64,18 +64,6 @@ object ReturningSql {
         masked.charAt(i - 2) == '_'))
   }
 
-  /** Depth-0 comma split of the projection list (selectExpr takes one
-    * string per output column). */
-  def projExprs(proj: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(proj)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect { case (',', i) if dep(i) == 0 => i }
-    (Seq(-1) ++ cuts :+ proj.length).sliding(2).map {
-      case Seq(a, b) => proj.substring(a + 1, b).trim
-      case _ => ""
-    }.filter(_.nonEmpty).toSeq
-  }
-
   /** Analyzer stub: the DML core carries all relation dependencies; the
     * RETURNING projection only references the target's columns. */
   def stub(stmt: String): String = split(stmt)._1

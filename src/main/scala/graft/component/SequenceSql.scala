@@ -218,11 +218,6 @@ object SequenceSql {
   final case class CreateStmt(name: String, defn: SeqDef,
                               orReplace: Boolean, ifNotExists: Boolean)
 
-  private def unq(s: String): String =
-    if ((s.startsWith("\"") && s.endsWith("\"")) ||
-      (s.startsWith("`") && s.endsWith("`"))) s.substring(1, s.length - 1)
-    else s
-
   def parseCreate(stmt: String): Option[CreateStmt] =
     createRe.findFirstMatchIn(stmt).map { m =>
       val opts = m.group(4)
@@ -241,7 +236,7 @@ object SequenceSql {
           .getOrElse(if (inc > 0) Long.MaxValue else -1L)
       val start = longOpt("(?is)\\bSTART(?:\\s+WITH)?\\s+(-?\\d+)")
         .getOrElse(if (inc > 0) min else max)
-      CreateStmt(unq(m.group(3)), SeqDef(start, inc, min, max, cycle),
+      CreateStmt(Dialect.unquote(m.group(3)), SeqDef(start, inc, min, max, cycle),
         orReplace = m.group(1) != null, ifNotExists = m.group(2) != null)
     }
 
@@ -249,7 +244,7 @@ object SequenceSql {
 
   def parseDrop(stmt: String): Option[DropStmt] =
     dropRe.findFirstMatchIn(stmt).map(m =>
-      DropStmt(unq(m.group(2)), ifExists = m.group(1) != null))
+      DropStmt(Dialect.unquote(m.group(2)), ifExists = m.group(1) != null))
 
   /** Static-analysis twin: CREATE SEQUENCE produces catalog object `name`
     * (so the DAG orders nextval users after it); DROP SEQUENCE *reads*

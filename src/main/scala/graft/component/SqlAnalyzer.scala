@@ -29,19 +29,23 @@ object SqlAnalyzer {
       outputs: Set[String],
       statementType: StatementType)
 
+  /** Parse one rewritten statement through the session-free stub chain:
+    * PIVOT / ASOF / COPY / CREATE SEQUENCE / CREATE TYPE / ... have no
+    * Catalyst spelling, so each stub swaps in a statement that parses with
+    * the same dependency sets. The ONE stub chain — `syntax_check` parses
+    * through it too, so a form the executor runs never fails the check.
+    * Throws the parser's exception on a statement no stub covers. */
+  def parseStubbed(spark: SparkSession, rewritten: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(
+      TypeSql.stub(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(CopyFrom.stub(
+        CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(SequenceSql.stub(
+          ExportDb.stub(UpsertSql.stub(MergeSql.stub(UpdateFromSql.stub(IndexSql.stub(
+            PrepareSql.stub(ReturningSql.stub(Dialect.alterColumnStub(
+              Dialect.analysisStub(rewritten)))))))))))))))))))
+
   def analyzeStatement(spark: SparkSession, rewritten: String): Analysis =
-    Try {
-      // PIVOT / ASOF / COPY / CREATE SEQUENCE statements have no Catalyst
-      // spelling; their session-free stubs parse with the same dependency
-      // sets
-      val plan = spark.sessionState.sqlParser.parsePlan(
-        TypeSql.stub(PositionalSql.stub(AsOfSql.stub(Pivot.staticStub(CopyFrom.stub(
-          CopyTo.stub(UnionByNameSql.stub(DescribeSql.stub(SequenceSql.stub(
-            ExportDb.stub(UpsertSql.stub(MergeSql.stub(UpdateFromSql.stub(IndexSql.stub(
-              PrepareSql.stub(ReturningSql.stub(Dialect.alterColumnStub(
-                Dialect.analysisStub(rewritten)))))))))))))))))))
-      fromPlan(plan)
-    }.getOrElse(Analysis(Set.empty, Set.empty, OtherStmt)) match {
+    Try(fromPlan(parseStubbed(spark, rewritten)))
+      .getOrElse(Analysis(Set.empty, Set.empty, OtherStmt)) match {
       case a =>
         // nextval('s')/currval('s') reference the sequence through a
         // string literal the relation walk can't see — inject it as a

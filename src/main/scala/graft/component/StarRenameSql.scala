@@ -68,13 +68,6 @@ object StarRenameSql {
     }
   }
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if (t.length >= 2 && ((t.head == '"' && t.last == '"') ||
-      (t.head == '`' && t.last == '`'))) t.substring(1, t.length - 1)
-    else t
-  }
-
   /** Expand against the analyzed schema; None when absent. */
   def expand(body: String, bodyDf: String => DataFrame): Option[String] = {
     val masked = Dialect.maskQuoted(body)
@@ -95,11 +88,11 @@ object StarRenameSql {
       cutM.map(_.start).getOrElse(body.length))
     val cols: Seq[String] = bodyDf(s"SELECT * $probeTail").schema.map(_.name)
     val excluded = exceptList.toSeq.flatMap(_.split(","))
-      .map(e => unq(e).toLowerCase).filter(_.nonEmpty).toSet
+      .map(e => Dialect.unquote(e).toLowerCase).filter(_.nonEmpty).toSet
     val renames: Seq[(String, String)] =
       body.substring(listOpen + 1, listClose).split(",").toSeq.map { piece =>
         "(?is)^(.+?)\\s+AS\\s+(.+)$".r.findFirstMatchIn(piece.trim) match {
-          case Some(m) => (unq(m.group(1)), unq(m.group(2)))
+          case Some(m) => (Dialect.unquote(m.group(1)), Dialect.unquote(m.group(2)))
           case None => throw new UserException(
             s"RENAME entry needs `old AS new`: ${piece.trim}")
         }

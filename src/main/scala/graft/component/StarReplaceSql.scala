@@ -97,6 +97,7 @@ object StarReplaceSql {
   private def items(stmt: String, masked: String, o: Occ): Seq[(String, String)] = {
     val body = stmt.substring(o.listOpen + 1, o.listClose)
     val mb = masked.substring(o.listOpen + 1, o.listClose)
+    // not Dialect.splitTop: each entry keeps its masked twin
     val cuts = {
       val b = scala.collection.mutable.ArrayBuffer[Int]()
       var d = 0

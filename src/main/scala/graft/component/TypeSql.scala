@@ -61,7 +61,7 @@ object TypeSql {
       "\\s*(CASCADE|RESTRICT)?\\s*;?\\s*$").r
 
   private def norm(name: String): String =
-    name.stripPrefix("\"").stripSuffix("\"").toLowerCase
+    Dialect.unquote(name).toLowerCase
 
   def parseCreate(stmt: String): Option[Create] =
     createRe.findFirstMatchIn(stmt).map(m =>

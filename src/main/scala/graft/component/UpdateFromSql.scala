@@ -29,18 +29,11 @@ object UpdateFromSql {
     "(?is)^\\s*UPDATE\\s+(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)" +
       "(?:\\s+(?:AS\\s+)?(?!SET\\b)([A-Za-z_]\\w*))?\\s+SET\\s+"
 
-  private def unq(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("\"") && t.endsWith("\"")) ||
-      (t.startsWith("`") && t.endsWith("`"))) t.substring(1, t.length - 1)
-    else t
-  }
-
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
     val hm = head.r.findFirstMatchIn(masked).getOrElse(return None)
-    val target = unq(stmt.substring(hm.start(1), hm.end(1)))
+    val target = Dialect.unquote(stmt.substring(hm.start(1), hm.end(1)))
     val alias = Option(hm.group(2))
     val rest = stmt.substring(hm.end)
     val rm = Dialect.maskQuoted(rest)
@@ -63,25 +56,13 @@ object UpdateFromSql {
         s"UPDATE $target ... FROM: only one source relation is supported " +
           "(pre-join multiple sources in a subquery)")
     val where = afterFrom.substring(wm.end).trim
-    val sets = splitTop(setsTxt).map { a =>
+    val sets = Dialect.splitTop(setsTxt).map { a =>
       val eq = Dialect.maskQuoted(a).indexOf('=')
       if (eq < 0) return None
-      (unq(a.substring(0, eq).trim.split("\\.").last), a.substring(eq + 1).trim)
+      (Dialect.unquote(a.substring(0, eq).trim.split("\\.").last), a.substring(eq + 1).trim)
     }
     if (sets.isEmpty) return None
     Some(Parsed(target, alias, sets, fromText, where))
-  }
-
-  private def splitTop(s: String): Seq[String] = {
-    val masked = Dialect.maskQuoted(s)
-    val dep = Dialect.depths(masked)
-    val cuts = masked.zipWithIndex.collect {
-      case (',', i) if dep(i) == 0 => i
-    }
-    (Seq(-1) ++ cuts :+ s.length).sliding(2).collect {
-      case Seq(a, b) if s.substring(a + 1, b).trim.nonEmpty =>
-        s.substring(a + 1, b).trim
-    }.toSeq
   }
 
   /** The source relation split into (text-to-run, alias): a bare name
@@ -100,7 +81,7 @@ object UpdateFromSql {
       val m = "(?is)^(`[^`]+`|\"[^\"]+\"|[A-Za-z_][\\w.]*)(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?\\s*$".r
         .findFirstMatchIn(t).getOrElse(throw new UserException(
           s"UPDATE ... FROM: unrecognized source relation '$t'"))
-      val name = unq(m.group(1))
+      val name = Dialect.unquote(m.group(1))
       (s"SELECT * FROM `${Names.view(name)}`",
         Option(m.group(2)).getOrElse(name))
     }
@@ -116,7 +97,7 @@ object UpdateFromSql {
     val stmt = stmt0.trim.stripSuffix(";")
     val masked = Dialect.maskQuoted(stmt)
     val hm = delHead.r.findFirstMatchIn(masked).getOrElse(return None)
-    val target = unq(stmt.substring(hm.start(1), hm.end(1)))
+    val target = Dialect.unquote(stmt.substring(hm.start(1), hm.end(1)))
     val alias = Option(hm.group(2))
     val afterUsing = stmt.substring(hm.end)
     val am = Dialect.maskQuoted(afterUsing)

@@ -41,6 +41,12 @@ object GraftSqlBridge {
       schema: types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** The local (shuffle + spill) directories Spark uses, resolved its own
+    * way: `SPARK_LOCAL_DIRS` (and the cluster-manager variables) take
+    * precedence over `spark.local.dir`. */
+  def localDirs(spark: SparkSession): Seq[String] =
+    org.apache.spark.util.Utils.getConfiguredLocalDirs(spark.sparkContext.getConf).toSeq
+
   /** Register an extra planner strategy on a running session. */
   def injectStrategy(spark: SparkSession, s: execution.SparkStrategy): Unit = {
     val cs = spark.asInstanceOf[classic.SparkSession]

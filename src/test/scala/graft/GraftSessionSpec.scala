@@ -71,6 +71,20 @@ class GraftSessionSpec extends SparkSpec {
         s"test session sets the bench-only $k")
   }
 
+  test("build silences the two WARNs that report normal operation") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    spark // the shared session is built through GraftSession.build
+    // the logger's OWN config, not the root level the test session lowers
+    val conf = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration
+    for (name <- Seq(
+        "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")) {
+      val lc = conf.getLoggerConfig(name)
+      assert(lc.getName == name && lc.getLevel == Level.ERROR, name)
+    }
+  }
+
   private def source(p: Path): String = Files.readString(p)
 
   test("component.Main builds the product session, with its memory budget") {

@@ -290,6 +290,29 @@ class ComponentSpec extends SparkSpec {
     // A25 parity: the spill/scratch-dir report (reference lists DuckDB
     // temp files alongside its memory dump)
     assert(err.contains("[debug] spill: local dir"), err)
+    // the report names the directory Spark actually uses: SPARK_LOCAL_DIRS
+    // takes precedence over spark.local.dir
+    sys.env.get("SPARK_LOCAL_DIRS").foreach { dirs =>
+      for (d <- dirs.split(","))
+        assert(err.contains(s"[debug] spill: local dir $d "), err)
+    }
+  }
+
+  test("syntax_check_on_startup passes a script with CREATE TYPE and runs it") {
+    val dd = datadir()
+    write(dd.resolve("config.json"),
+      """{"parameters": {"syntax_check_on_startup": true,
+        |  "blocks": [{"name": "b", "codes": [{"name": "mk", "script": [
+        |    "CREATE TYPE mood AS ENUM ('sad', 'ok')",
+        |    "CREATE TABLE t AS SELECT 1 AS x FROM range(1)",
+        |    "ALTER TABLE t ADD COLUMN IF NOT EXISTS y INTEGER",
+        |    "ALTER TABLE t ALTER COLUMN x SET DATA TYPE BIGINT USING x * 10",
+        |    "DROP TYPE mood"]}]}]},
+        | "storage": {"input": {"tables": []},
+        |             "output": {"tables": [{"source": "t", "destination": "o"}]}}}""".stripMargin)
+    Component.run(spark, dd.toString)
+    assert(Files.readString(dd.resolve("out/tables/t")).linesIterator.toList ==
+      List("\"x\",\"y\"", "\"10\",\"\""))
   }
 
   test("duplicate block names run as separate blocks, once each") {
