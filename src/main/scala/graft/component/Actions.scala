@@ -18,12 +18,10 @@ object Actions {
     config.namedScripts.flatMap { s =>
       val name = s.name
       Dialect.prepare(s.sql).flatMap { stmt =>
-        // the ROLLBACK sentinel parses cleanly by design — surface the
-        // executor's rejection as this statement's issue instead; the
-        // ATTACH/CREATE TYPE/... reject sentinels follow the same pattern
-        if (stmt.trim == Dialect.RollbackSentinel)
-          List(ValidationIssue(name, Dialect.RollbackMessage))
-        else if (Dialect.rejectedKind(stmt).isDefined)
+        // the reject sentinels (ROLLBACK/ATTACH/CREATE TYPE/...) parse
+        // cleanly by design — surface the executor's rejection as this
+        // statement's issue instead
+        if (Dialect.rejectedKind(stmt).isDefined)
           List(ValidationIssue(name,
             Dialect.RejectMessages(Dialect.rejectedKind(stmt).get)))
         else {

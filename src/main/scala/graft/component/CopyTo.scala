@@ -1,8 +1,6 @@
 package graft.component
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -129,15 +127,9 @@ object CopyTo {
       // contract is the readable layout, not the file names.
       val writer = df.write.mode("overwrite").partitionBy(p.partitionBy: _*)
       p.format match {
-        case "CSV" => writer
+        case "CSV" => Export.csvOptions(writer, p.delimiter, p.quote,
+            p.nullStr.getOrElse(""), p.forceQuote)
           .option("header", p.header.toString)
-          .option("sep", p.delimiter)
-          .option("quote", p.quote)
-          .option("escape", p.quote) // RFC4180, like the single-file sink
-          .option("nullValue", p.nullStr.getOrElse(""))
-          .option("quoteAll", p.forceQuote.toString)
-          .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-          .option("dateFormat", "yyyy-MM-dd")
           .csv(dest.toString)
         case "PARQUET" => writer.parquet(dest.toString)
         case "JSON"    => writer.json(dest.toString)
@@ -145,7 +137,8 @@ object CopyTo {
       return
     }
     p.format match {
-      case "CSV" => writeCsv(df, dest, p)
+      case "CSV" => Export.writeSingleCsv(df, dest, p.header, p.delimiter,
+        p.quote, p.nullStr.getOrElse(""), p.forceQuote)
       case "PARQUET" => writeStaged(dest) { stage =>
         df.coalesce(1).write.mode("overwrite").parquet(stage)
       }
@@ -156,68 +149,11 @@ object CopyTo {
   }
 
   /** Stage a one-part Spark write, then move the part file to `dest`. */
-  private def writeStaged(dest: Path)(write: String => Unit): Unit = {
-    val tmp = Files.createTempDirectory("graft_copy_")
-    try {
-      val stage = tmp.resolve("stage").toString
-      write(stage)
-      val listing = Files.list(Paths.get(stage))
-      val part =
-        try listing.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-"))
-        finally listing.close()
-      part match {
-        case Some(f) =>
-          Files.move(f, dest, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        case None => Files.deleteIfExists(dest); Files.createFile(dest)
-      }
-    } finally cleanup(tmp)
-  }
-
-  private def writeCsv(df: DataFrame, dest: Path, p: Parsed): Unit = {
-    val tmp = Files.createTempDirectory("graft_copy_")
-    try {
-      val stage = tmp.resolve("stage").toString
-      df.coalesce(1).write
-        .option("header", "false")
-        .option("sep", p.delimiter)
-        .option("quote", p.quote)
-        // RFC4180 quote doubling ("" inside a quoted field), matching
-        // both the hand-written header below and DuckDB's output —
-        // Spark's default is backslash-escaping, which would make body
-        // rows inconsistent with the header
-        .option("escape", p.quote)
-        .option("nullValue", p.nullStr.getOrElse(""))
-        .option("quoteAll", p.forceQuote.toString)
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-        .option("dateFormat", "yyyy-MM-dd")
-        .mode("overwrite")
-        .csv(stage)
-      val listing = Files.list(Paths.get(stage))
-      val part =
-        try listing.iterator().asScala
-          .find(_.getFileName.toString.startsWith("part-"))
-        finally listing.close()
-      val out = Files.newOutputStream(dest)
-      try {
-        if (p.header) {
-          val q = p.quote
-          val header = df.columns
-            .map(c => if (p.forceQuote) q + c.replace(q, q + q) + q else c)
-            .mkString("", p.delimiter, "\n")
-          out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-        part.foreach(f => Files.copy(f, out)) // zero rows ⇒ no part file
-      } finally out.close()
-    } finally cleanup(tmp)
-  }
-
-  private def cleanup(tmp: Path): Unit = {
-    val walk = Files.walk(tmp)
-    try walk.iterator().asScala.toSeq.reverse.foreach(f =>
-      try Files.deleteIfExists(f) catch { case _: Exception => () })
-    finally walk.close()
-  }
+  private def writeStaged(dest: Path)(write: String => Unit): Unit =
+    Export.withStagedPart(write) {
+      case Some(f) => Files.move(f, dest, StandardCopyOption.REPLACE_EXISTING)
+      case None => Files.deleteIfExists(dest); Files.createFile(dest)
+    }
 }
 
 /** DuckDB `COPY <table> FROM '<file>' (options)` — append a file's rows

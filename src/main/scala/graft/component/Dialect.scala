@@ -20,11 +20,9 @@ import scala.collection.mutable.ListBuffer
   */
 object Dialect {
 
-  /** What a ROLLBACK statement rewrites to: parseable (static analysis
-    * lists it as an issue instead of crashing) yet detectable (the
-    * executor rejects it loudly — pretending the undo happened is the one
-    * unacceptable answer). */
-  val RollbackSentinel = "SET __graft_rollback_rejected = true"
+  /** What ROLLBACK / ABORT rewrite to — one more reject kind: pretending
+    * the undo happened is the one unacceptable answer. */
+  val RollbackSentinel: String = rejectSentinel("ROLLBACK")
 
   val RollbackMessage: String =
     "ROLLBACK is not supported: statements commit as they run " +
@@ -36,6 +34,7 @@ object Dialect {
     * LISTS the issue per statement, the executor throws the same message
     * at run time — never an opaque parse error, never silent inertness. */
   val RejectMessages: Map[String, String] = Map(
+    "ROLLBACK" -> RollbackMessage,
     "ATTACH" -> ("ATTACH is not supported: the component operates on a " +
       "single workspace catalog; declare external tables in the input " +
       "mapping, or read files directly (read_parquet/read_csv/FROM 'path')"),
@@ -927,11 +926,39 @@ object Dialect {
       val sel = stmt.substring(selStart, fromStart)
       val rest = stmt.substring(fromStart, q)
       val pred = stmt.substring(q + "QUALIFY".length, tailStart).trim
+      val tail = qualifiedToOutput(stmt.substring(tailStart, blockEnd), sel, rest)
       stmt = stmt.substring(0, selKw) +
         s"SELECT * EXCEPT (__q) FROM (SELECT $sel, ($pred) AS __q $rest) WHERE __q " +
-        stmt.substring(tailStart)
+        tail + stmt.substring(blockEnd)
     }
     stmt
+  }
+
+  /** The ORDER BY / LIMIT tail of a QUALIFY block sits outside the
+    * wrapper subquery, where the FROM clause's relation names are gone:
+    * each `r.c` naming one of them reads the wrapper's output instead —
+    * the output name of the select item spelled `r.c`, else `c`. */
+  private def qualifiedToOutput(tail: String, sel: String, from: String): String = {
+    val rels = "(?i)(?:\\bFROM|\\bJOIN|,)\\s+([A-Za-z_][\\w.]*)(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?".r
+      .findAllMatchIn(maskQuoted(from))
+      .flatMap(m => Seq(m.group(1).split('.').last) ++ Option(m.group(2)))
+      .map(_.toLowerCase).toSet
+    val ref = "(?<![\\w.])([A-Za-z_]\\w*)\\s*\\.\\s*([A-Za-z_]\\w*)\\b(?!\\s*[.(])".r
+    val items = splitTop(sel).flatMap { it =>
+      "(?is)^([A-Za-z_]\\w*)\\s*\\.\\s*([A-Za-z_]\\w*)(?:\\s+(?:AS\\s+)?([A-Za-z_]\\w*))?$".r
+        .findFirstMatchIn(it).map(m =>
+          (m.group(1).toLowerCase, m.group(2).toLowerCase) ->
+            Option(m.group(3)).getOrElse(m.group(2)))
+    }.toMap
+    val masked = maskQuoted(tail)
+    val out = new StringBuilder
+    var at = 0
+    for (m <- ref.findAllMatchIn(masked) if rels(m.group(1).toLowerCase)) {
+      out.append(tail.substring(at, m.start)).append(
+        items.getOrElse((m.group(1).toLowerCase, m.group(2).toLowerCase), m.group(2)))
+      at = m.end
+    }
+    out.append(tail.substring(at)).toString
   }
 
   /** The statement with quoted regions and comments blanked — for textual
@@ -2026,39 +2053,24 @@ object Dialect {
     * (A23/A24), so user SQL must not fail on them but must not
     * misconfigure Spark either. `SET k = v` already parses natively. */
   private def rewritePragma(stmt: String): String = {
-    // transaction + maintenance statements. BEGIN/COMMIT/END are inert:
-    // each block already runs as one session, and every table
-    // materialization is an atomic staging-dir swap — the weaker
-    // statement-level atomicity is this engine's documented semantics.
-    // ROLLBACK must NOT be silently inert (the user asked for work to be
-    // undone; pretending it happened is the one unacceptable answer) —
-    // the executor surfaces it loudly. CHECKPOINT/VACUUM/ANALYZE are
-    // DuckDB storage maintenance with no Spark meaning: inert, like the
-    // PRAGMA knobs.
-    val txn = "(?is)^\\s*(BEGIN(?:\\s+TRANSACTION)?|COMMIT|END\\s+TRANSACTION|CHECKPOINT|FORCE\\s+CHECKPOINT|VACUUM(?:\\s+ANALYZE)?|ANALYZE)\\s*;?\\s*$".r
-    txn.findFirstMatchIn(stmt).foreach { m =>
-      val kw = m.group(1).toUpperCase.replaceAll("\\s+", "_")
-      return s"SET __graft_inert_$kw = true"
-    }
-    // rewritten to a parseable SENTINEL, not thrown here: prepare() is
-    // also the front door of every static-analysis action (syntax_check,
-    // lineage, expected_input_tables, execution_plan), which must LIST a
-    // script's ROLLBACK as an issue, not crash on it — only the executor
-    // rejects it loudly at run time ([[Executor.runStatement]])
-    if ("(?is)^\\s*ROLLBACK\\b".r.findFirstIn(stmt).isDefined)
-      return Dialect.RollbackSentinel
-    // ABORT is DuckDB's ROLLBACK alias (probed v1.0) — same loud path
-    if ("(?is)^\\s*ABORT\\s*;?\\s*$".r.findFirstIn(stmt).isDefined)
-      return Dialect.RollbackSentinel
     // transaction & storage-maintenance statements (probed v1.0: all
-    // accepted): this executor commits as it runs and has no WAL, so
-    // BEGIN/COMMIT/END and VACUUM/ANALYZE/CHECKPOINT are inert — the
-    // semantics match because ROLLBACK/ABORT, the only statements that
-    // could observe a difference, reject loudly above
-    if (("(?is)^\\s*(BEGIN(\\s+TRANSACTION)?|COMMIT|END(\\s+TRANSACTION)?|" +
-        "VACUUM(\\s+ANALYZE)?|ANALYZE|(FORCE\\s+)?CHECKPOINT)\\s*;?\\s*$").r
-        .findFirstIn(stmt).isDefined)
-      return "SET __graft_inert_txn_maintenance = true"
+    // accepted) are inert: each block already runs as one session, every
+    // table materialization is an atomic staging-dir swap (statement-
+    // level atomicity is this engine's documented semantics), and there
+    // is no WAL. The semantics match because ROLLBACK/ABORT, the only
+    // statements that could observe a difference, reject loudly below
+    "(?is)^\\s*(BEGIN(?:\\s+TRANSACTION)?|COMMIT|END(?:\\s+TRANSACTION)?|(?:FORCE\\s+)?CHECKPOINT|VACUUM(?:\\s+ANALYZE)?|ANALYZE)\\s*;?\\s*$".r
+      .findFirstMatchIn(stmt).foreach { m =>
+        val kw = m.group(1).toUpperCase.replaceAll("\\s+", "_")
+        return s"SET __graft_inert_$kw = true"
+      }
+    // ROLLBACK and ABORT, its DuckDB alias (probed v1.0), rewrite to a
+    // parseable reject SENTINEL, not thrown here: prepare() is also the
+    // front door of every static-analysis action, which must LIST a
+    // script's ROLLBACK as an issue, not crash on it — only the executor
+    // rejects it loudly at run time
+    if ("(?is)^\\s*(ROLLBACK\\b|ABORT\\s*;?\\s*$)".r.findFirstIn(stmt).isDefined)
+      return RollbackSentinel
     // TRUNCATE [TABLE] t ≡ DELETE FROM t: the executor's DELETE path
     // without a condition already re-materializes the empty state
     // atomically (both spellings probed on DuckDB v1.0)

@@ -5,8 +5,7 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
 
 /** Block-sequential / batch-parallel executor over one SparkSession
@@ -20,8 +19,8 @@ import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
   * parts"): CREATE VIEW registers lazily; CREATE TABLE materializes to the
   * warehouse directory (parquet) and registers the read-back — which also
   * implements the reference's database-passthrough (A11); INSERT unions and
-  * re-registers; UPDATE/DELETE re-derive with when()/filter() from the
-  * parsed assignments/condition.
+  * re-registers; UPDATE, DELETE, MERGE and the upserts re-derive the
+  * table through one MERGE derivation ([[executeMerge]]).
   */
 final case class QueryTiming(name: String, seconds: Double)
 final case class ExecutionStats(timings: List[QueryTiming]) {
@@ -63,12 +62,54 @@ private[component] object TableMeta {
     ("(?i)\\b" + java.util.regex.Pattern.quote(c) + "\\b").r
 }
 
-class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
+/** One row-changing statement lowered onto [[Executor.executeMerge]]:
+  * MERGE itself, UPDATE / DELETE with or without FROM / USING, and the
+  * upserts. `label` heads the statement's error messages; `source` is
+  * None for plain UPDATE / DELETE (the target side alone, no join);
+  * `checkedBatch` marks a source already pinned to one evaluation and
+  * checked key-unique on `on` (the upsert's batch), so neither is
+  * repeated. */
+private[component] final case class RowChange(
+    label: String,
+    target: String,
+    targetAlias: Option[String],
+    source: Option[(DataFrame, String)],
+    on: String,
+    clauses: Seq[MergeSql.Clause],
+    checkedBatch: Boolean = false)
 
+private[component] object Executor {
   // TEMP is accepted and treated like a regular object (the whole run is
   // one session, DuckDB's temp scope); IF NOT EXISTS skips when present
-  private val createView =
+  val createView =
     """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?`?([^`\s]+)`?\s+AS\s+(.*)$""".r
+
+  /** Leading `--` / block comments stripped, so statement CLASSIFICATION
+    * sees the first keyword (the corpus habitually titles scripts with a
+    * comment line: `-- Export sliced as one table\nCREATE VIEW ...`). */
+  def stripLeadingComments(stmt: String): String = {
+    var s = stmt
+    var changed = true
+    while (changed) {
+      val t = s.dropWhile(_.isWhitespace)
+      val next =
+        if (t.startsWith("--")) {
+          val nl = t.indexOf('\n')
+          if (nl < 0) "" else t.substring(nl + 1)
+        } else if (t.startsWith("/*")) {
+          val end = t.indexOf("*/", 2)
+          if (end < 0) "" else t.substring(end + 2)
+        } else t
+      changed = next != s
+      s = next
+    }
+    s
+  }
+}
+
+class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
+  import Executor.{createView, stripLeadingComments}
+
   private val createTable =
     """(?is)^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?`?([^`\s(]+)`?\s+AS\s+(.*)$""".r
   private val insertInto =
@@ -238,18 +279,31 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     * connection-scoped prepared statements; [[PrepareSql]]). */
   private val prepared = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** Re-register every view that (transitively) depends on `changed` after
-    * its backing files were swapped by a DML re-materialization — otherwise
-    * a block-1 view read after a block-2 INSERT/UPDATE/DELETE throws
-    * FileNotFoundException on the deleted old files. Creation order is a
+  /** Re-derive through [[bodyDf]] every view that (transitively) depends
+    * on `changed` after its files were swapped by a table write, deleted
+    * by a DROP, or moved by a RENAME (`renamedTo`: references to
+    * `changed` in each body and its deps point at the new name) —
+    * otherwise a block-1 view read after a block-2 INSERT/UPDATE/DELETE
+    * throws FileNotFoundException on the deleted old files. A dependent
+    * whose body no longer resolves is unregistered but kept in
+    * [[viewDefs]]: reading it is a catalog error, and re-creating what it
+    * reads restores it (DuckDB's late-bound views). Creation order is a
     * valid re-bind order: a view body can only reference objects that
     * already existed when it was created. */
-  private def rebind(changed: String): Unit = viewDefs.synchronized {
-    val affected = scala.collection.mutable.Set(changed)
+  private def rebind(changed: Set[String],
+                     renamedTo: Option[String] = None): Unit = viewDefs.synchronized {
+    val affected = scala.collection.mutable.Set(changed.toSeq: _*)
     viewDefs.forEach { (key, defn) =>
-      val (sanitized, body, deps) = defn
-      if (deps.exists(affected)) {
-        spark.sql(body).createOrReplaceTempView(sanitized)
+      val (sanitized, body0, deps0) = defn
+      if (deps0.exists(d => affected(d.toLowerCase))) {
+        val (body, deps) = renamedTo.fold((body0, deps0)) { to =>
+          (changed.foldLeft(body0)(renameRefs(_, _, to)),
+            deps0.map(d => if (changed(d.toLowerCase)) Names.view(to).toLowerCase else d))
+        }
+        viewDefs.put(key, (sanitized, body, deps))
+        scala.util.Try(bodyDf(body)).fold(
+          _ => spark.catalog.dropTempView(sanitized),
+          _.createOrReplaceTempView(sanitized))
         affected += key
       }
     }
@@ -275,41 +329,14 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     ExecutionStats(timings.toList)
   }
 
-  /** Leading `--` / block comments stripped, so statement CLASSIFICATION
-    * sees the first keyword (the corpus habitually titles scripts with a
-    * comment line: `-- Export sliced as one table\nCREATE VIEW ...`). */
-  private def stripLeadingComments(stmt: String): String = {
-    var s = stmt
-    var changed = true
-    while (changed) {
-      val t = s.dropWhile(_.isWhitespace)
-      val next =
-        if (t.startsWith("--")) {
-          val nl = t.indexOf('\n')
-          if (nl < 0) "" else t.substring(nl + 1)
-        } else if (t.startsWith("/*")) {
-          val end = t.indexOf("*/", 2)
-          if (end < 0) "" else t.substring(end + 2)
-        } else t
-      changed = next != s
-      s = next
-    }
-    s
-  }
-
   /** Run one rewritten statement against the session catalog. Returns the
     * RETURNING projection over the DML's affected-row delta when the
     * statement carries one (None otherwise) — the reference exposes
     * RETURNING rows as the statement's result set the same way. */
   def runStatement(stmt0: String): Option[DataFrame] = {
     val stmtFull = stripLeadingComments(stmt0)
-    // ROLLBACK reaches execution as the dialect's sentinel (static
-    // analysis lists it; a RUN must fail loudly — the user asked for
-    // work to be undone and statements here commit as they run)
-    if (stmtFull.trim == Dialect.RollbackSentinel)
-      throw new UserException(Dialect.RollbackMessage)
-    // ATTACH/DETACH/CREATE TYPE/ALTER SEQUENCE arrive as reject sentinels
-    // for the same reason: static analysis lists them, a run fails loudly
+    // ROLLBACK/ATTACH/DETACH/CREATE TYPE/ALTER SEQUENCE/... arrive as
+    // reject sentinels: static analysis lists them, a run fails loudly
     Dialect.rejectedKind(stmtFull).foreach(k =>
       throw new UserException(Dialect.RejectMessages(k)))
     // RETURNING splits off before dispatch (Spark's parser has no such
@@ -549,27 +576,11 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
               viewDefs.put(Names.view(to).toLowerCase,
                 (Names.view(to), body, deps))
           }
-          // DuckDB's late-bound views would error after the rename; this
-          // engine's eager-bind contract keeps dependent views WORKING
-          // instead — but a materialized table's files just MOVED, so
-          // their captured file indexes point at deleted paths. Re-run
-          // each (transitively) dependent view with references renamed,
-          // in creation order, recording the new name in body + deps so
-          // later DML on the new name keeps rebinding them.
-          val affected =
-            scala.collection.mutable.Set(src.toLowerCase, from.toLowerCase)
-          viewDefs.forEach { (key, defn) =>
-            val (sanitized, body, deps) = defn
-            if (deps.exists(d => affected(d.toLowerCase))) {
-              val newBody = renameRefs(renameRefs(body, from, to), src, to)
-              val newDeps = deps.map(d =>
-                if (affected(d.toLowerCase)) to.toLowerCase else d)
-              spark.sql(newBody).createOrReplaceTempView(sanitized)
-              viewDefs.put(key, (sanitized, newBody, newDeps))
-              affected += key
-            }
-          }
         }
+        // DuckDB's late-bound views would error after the rename; this
+        // engine keeps dependent views WORKING, re-pointed at the new name
+        // (later DML on it keeps rebinding them)
+        rebind(Set(src.toLowerCase, from.toLowerCase), Some(to))
       }
 
     case dropStmt(kind, ifExists, name) =>
@@ -586,14 +597,15 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       delta = Some(upsert(UpsertSql.parse(stmt).get))
 
     case _ if MergeSql.parse(stmt).isDefined =>
-      delta = executeMerge(MergeSql.parse(stmt).get, returning.isDefined)
+      val m = MergeSql.parse(stmt).get
+      delta = executeMerge(RowChange("MERGE INTO", m.target, m.targetAlias,
+        Some(sourceDf(m.sourceText)), m.on, m.clauses), returning.isDefined)
 
     case _ if UpdateFromSql.parse(stmt).isDefined =>
-      delta = updateFrom(UpdateFromSql.parse(stmt).get, returning.isDefined)
-
-    case _ if UpdateFromSql.parseDelete(stmt).isDefined =>
-      delta = deleteUsing(UpdateFromSql.parseDelete(stmt).get,
-        returning.isDefined)
+      val u = UpdateFromSql.parse(stmt).get
+      delta = executeMerge(RowChange(u.label, u.target, u.targetAlias,
+        u.fromText.map(sourceDf), u.on, Seq(u.clause)), returning.isDefined)
+        .map(_.drop("merge_action")) // the pseudo-column is MERGE's alone
 
     case _ if IndexSql.parseCreate(stmt).isDefined =>
       // a NON-unique index is a lookup accelerator with no semantic
@@ -680,15 +692,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       // statement kind; a RETURNING inside returns its rows)
       return runStatement(PrepareSql.substitute(body, e))
 
-    // the sequence scale knob (PRAGMA graft_sequence_blocks = n arrives
-    // here as the dialect's SET spelling): n > 1 switches nextval to
-    // per-partition block reservation — see SequenceSql's scale notes
-    case _ if "(?is)^\\s*SET\\s+graft_sequence_blocks\\s*=\\s*(-?\\d+)\\s*;?\\s*$".r
-        .findFirstMatchIn(stmt).isDefined =>
-      SequenceSql.setBlockSize(
-        "(?is)^\\s*SET\\s+graft_sequence_blocks\\s*=\\s*(-?\\d+)\\s*;?\\s*$".r
-          .findFirstMatchIn(stmt).get.group(1).toLong)
-
     case _ if CopyTo.parse(stmt).isDefined =>
       CopyTo.execute(spark, CopyTo.parse(stmt).get, bodyDf)
 
@@ -745,69 +748,10 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       writeTable(p.target, existing.unionByName(aligned))
 
     case _ =>
-      scala.util.Try(spark.sessionState.sqlParser.parsePlan(stmt)).toOption match {
-        case Some(plan) if plan.getClass.getSimpleName == "DeleteFromTable" =>
-          val name = targetName(plan)
-          val cond = plan.productIterator.collectFirst {
-            case e: org.apache.spark.sql.catalyst.expressions.Expression => e
-            case Some(e: org.apache.spark.sql.catalyst.expressions.Expression) => e
-          }
-          val df = spark.table(s"`${Names.view(name)}`")
-          // SQL DELETE keeps rows whose predicate is NULL (unknown); a bare
-          // filter(!p) would drop them, so fold NULL to false first
-          val out = cond
-            .map(e => df.filter(!coalesce(GraftSqlBridge.column(e), lit(false))))
-            .getOrElse(df.limit(0))
-          if (returning.isDefined) {
-            // the deleted rows' OLD values — pinned before the swap
-            // deletes the files they'd be read from
-            val hit = cond.map(e =>
-              coalesce(GraftSqlBridge.column(e), lit(false))).getOrElse(lit(true))
-            delta = Some(df.filter(hit).localCheckpoint())
-          }
-          writeTable(name, out)
-
-        case Some(plan) if plan.getClass.getSimpleName == "UpdateTable" =>
-          val name = targetName(plan)
-          val df = spark.table(s"`${Names.view(name)}`")
-          val (assigns, cond) = updateParts(plan)
-          // all SET expressions evaluate against the PRE-update row (SQL
-          // simultaneous-assignment semantics: `SET a = b, b = a` swaps),
-          // so build every output column in a single projection; SET
-          // targets match case-insensitively like the resolver
-          val assigned = assigns.map { case (k, v) => k.toLowerCase -> v }.toMap
-          val outCols = df.columns.map { c =>
-            assigned.get(c.toLowerCase) match {
-              case Some(value) => (cond match {
-                case Some(p) => when(GraftSqlBridge.column(p),
-                  GraftSqlBridge.column(value)).otherwise(col(c))
-                case None => GraftSqlBridge.column(value)
-              }).as(c)
-              case None => col(c)
-            }
-          }
-          writeTable(name, if (returning.isDefined) {
-            // RETURNING must observe the WRITTEN rows: a nondeterministic
-            // SET (nextval(), uuidv7(), random()) evaluated once for the
-            // table and again for the delta would return rows that were
-            // never stored and advance sequences twice. Pin ONE shared
-            // evaluation — checkpoint the hit-annotated projection and
-            // derive both the new table state and the delta from it
-            // (the same single-eval contract as INSERT/upsert above)
-            val hit = cond.map(p =>
-              coalesce(GraftSqlBridge.column(p), lit(false))).getOrElse(lit(true))
-            val pinned = df.select(outCols :+ hit.as("__upd_ret_hit"): _*)
-              .localCheckpoint()
-            delta = Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-            pinned.drop("__upd_ret_hit")
-          } else df.select(outCols: _*))
-
-        case _ =>
-          // every other statement — SELECT / SET / EXPLAIN, and the bare
-          // PIVOT / ASOF / DESCRIBE / ... forms Spark cannot parse — runs
-          // through bodyDf once, for effect + error surfacing
-          bodyDf(stmt).queryExecution.assertAnalyzed()
-      }
+      // every other statement — SELECT / SET / EXPLAIN, and the bare
+      // PIVOT / ASOF / DESCRIBE / ... forms Spark cannot parse — runs
+      // through bodyDf once, for effect + error surfacing
+      bodyDf(stmt).queryExecution.assertAnalyzed()
     }
     returning.map { proj =>
       val d = delta.getOrElse(throw new UserException(
@@ -887,32 +831,6 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
       }
   }
 
-  private def targetName(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): String =
-    plan.collectFirst {
-      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
-    }.getOrElse(throw new UserException(s"cannot resolve statement target in: $plan"))
-
-  /** (assignments, condition) out of a parsed UpdateTable node. */
-  private def updateParts(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : (Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
-         Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    var assigns = Seq.empty[(String, Expression)]
-    var cond: Option[Expression] = None
-    plan.productIterator.foreach {
-      case s: Seq[_] =>
-        assigns = s.collect {
-          case a if a.getClass.getSimpleName == "Assignment" =>
-            val it = a.asInstanceOf[Product].productIterator.toList
-            (Dialect.unquote(it.head.asInstanceOf[Expression].sql),
-              it(1).asInstanceOf[Expression])
-        }
-      case Some(e: Expression) => cond = Some(e)
-      case _ =>
-    }
-    (assigns, cond)
-  }
-
   private val version = new java.util.concurrent.atomic.AtomicLong()
 
   /** NOT NULL / CHECK enforcement riding the write pass: assert_true
@@ -949,7 +867,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     if (Files.exists(dir)) deleteRecursively(dir) // replace previous state
     Files.move(staging, dir)
     spark.read.parquet(dir.toString).createOrReplaceTempView(sanitized)
-    rebind(sanitized.toLowerCase)
+    rebind(Set(sanitized.toLowerCase))
   }
 
   /** THE table/view drop: the registration, a table's warehouse files,
@@ -962,6 +880,7 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     if (java.nio.file.Files.isDirectory(dir)) deleteRecursively(dir)
     viewDefs.synchronized { viewDefs.remove(sanitized.toLowerCase) }
     clearTableMeta(sanitized.toLowerCase)
+    rebind(Set(sanitized.toLowerCase))
   }
 
   /** Depth-first delete; the walk stream is CLOSED (an unclosed
@@ -1097,145 +1016,79 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     (existing, aligned)
   }
 
-  /** `UPDATE ... FROM` re-derivation — one left join of the target
-    * against the source on the user's WHERE, one projection applying the
-    * SET expressions to matched rows. Multi-match keeps ONE arbitrary
-    * source row per target row (DuckDB does the same, probed — no
-    * error). Unqualified column references shared by both sides raise
-    * the analyzer's ambiguity error — qualify with the table/alias
-    * names, which this join exposes verbatim. */
-  private def updateFrom(u: UpdateFromSql.Parsed,
-                         wantDelta: Boolean): Option[DataFrame] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{monotonically_increasing_id, row_number}
-    val sanitized = Names.view(u.target)
-    val existing = spark.table(s"`$sanitized`")
-    val tAlias = u.targetAlias.getOrElse(u.target)
-    val (srcSql, sAlias) = UpdateFromSql.sourceOf(u)
-    val src = bodyDf(srcSql).withColumn("__upd_hit", lit(true))
-    val joined = existing.withColumn("__upd_uid", monotonically_increasing_id())
-      .alias(tAlias)
-      .join(src.alias(sAlias), expr(u.where), "left_outer")
-    val one = joined.withColumn("__upd_rn",
-      row_number().over(Window.partitionBy(col("__upd_uid"))
-        .orderBy(col("__upd_hit").desc_nulls_last)))
-      .filter(col("__upd_rn") === 1)
-    val setMap = u.sets.map { case (c, e) => c.toLowerCase -> e }.toMap
-    val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
-    setMap.keys.foreach(c => if (!byLower.contains(c))
-      throw new UserException(
-        s"UPDATE ${u.target}: SET column $c does not exist"))
-    val projCols = existing.columns.map { c =>
-      setMap.get(c.toLowerCase) match {
-        case Some(e) => when(coalesce(col("__upd_hit"), lit(false)),
-          expr(e).cast(existing.schema(c).dataType))
-          .otherwise(expr(s"`$tAlias`.`$c`")).as(c)
-        case None => expr(s"`$tAlias`.`$c`").as(c)
-      }
-    }
-    // RETURNING delta: the matched rows with their post-SET values. ONE
-    // shared evaluation of the SET projection (checkpoint the hit-
-    // annotated frame, derive table and delta from it): a separate
-    // delta select would re-evaluate nondeterministic SETs (nextval(),
-    // uuidv7(), random()) and return rows that differ from the written
-    // ones — the same single-eval pin as INSERT/upsert/plain UPDATE.
-    // Also pinned BEFORE the swap deletes the old files it reads.
-    if (wantDelta) {
-      val pinned = one.select(projCols :+
-        coalesce(col("__upd_hit"), lit(false)).as("__upd_ret_hit"): _*)
-        .localCheckpoint()
-      writeTable(u.target, pinned.drop("__upd_ret_hit"))
-      Some(pinned.filter(col("__upd_ret_hit")).drop("__upd_ret_hit"))
-    } else {
-      writeTable(u.target, one.select(projCols: _*))
-      None
-    }
+  /** A FROM / USING / MERGE source relation as (frame, alias). */
+  private def sourceDf(text: String): (DataFrame, String) = {
+    val (sql, alias) = UpdateFromSql.sourceOf(text)
+    (bodyDf(sql), alias)
   }
 
-  /** `DELETE ... USING` re-derivation — an anti-join of the target
-    * against the source on the user's WHERE keeps exactly the rows with
-    * NO match (the deleted set is the matched one). Same parse/scope
-    * contract as [[updateFrom]]. */
-  private def deleteUsing(u: UpdateFromSql.Parsed,
-                          wantDelta: Boolean): Option[DataFrame] = {
-    val sanitized = Names.view(u.target)
-    val existing = spark.table(s"`$sanitized`")
-    val tAlias = u.targetAlias.getOrElse(u.target)
-    val (srcSql, sAlias) = UpdateFromSql.sourceOf(u)
-    val src = bodyDf(srcSql)
-    val kept = existing.alias(tAlias)
-      .join(src.alias(sAlias), expr(u.where), "left_anti")
-    // RETURNING delta: the DELETED rows (the semi-join complement of
-    // kept), old values, pinned before the swap
-    val delta = if (wantDelta)
-      Some(existing.alias(tAlias)
-        .join(src.alias(sAlias), expr(u.where), "left_semi").localCheckpoint())
-    else None
-    writeTable(u.target, kept)
-    delta
-  }
-
-  /** MERGE INTO re-derivation (spec-pinned DuckDB 1.4 semantics —
-    * [[MergeSql]]; the local v1.0 oracle cannot parse the statement).
+  /** THE row-change derivation: MERGE INTO (spec-pinned DuckDB 1.4
+    * semantics — [[MergeSql]]; the local v1.0 oracle cannot parse the
+    * statement) and every UPDATE, DELETE and upsert lowered onto it
+    * ([[RowChange]]), so the SET-column check, the cast to the column
+    * type, NULL-condition handling and the RETURNING pin exist once.
     * Two distributed branches, no per-row path:
     *
     *  - target side (WHEN MATCHED / NOT MATCHED BY SOURCE): ONE left
-    *    join of the target against the source on the user's ON, a
-    *    first-match-wins when() chain picks each row's clause, one
-    *    projection applies the UPDATE SETs, a filter drops the DELETEs.
-    *    Several source rows matching one target row keep ONE arbitrary
-    *    match — the documented UPDATE..FROM rule this engine already
-    *    pins (probed v1.0, no error). When the ON is a pure equi
-    *    conjunction and a cheap probe proves the source key-unique (the
-    *    common delta shape), the uid + row_number dedup — a full-target
-    *    shuffle — is SKIPPED entirely; otherwise the window path owns
-    *    correctness.
+    *    join of the target against the source on the ON condition (no
+    *    join without a source: every row is matched), a first-match-wins
+    *    when() chain picks each row's clause, one projection applies the
+    *    UPDATE SETs cast to the column types, a filter drops the DELETEs.
+    *    A NULL clause condition does not fire, so DELETE keeps NULL-
+    *    predicate rows (SQL's unknown). Several source rows matching one
+    *    target row keep ONE arbitrary match — the UPDATE..FROM rule
+    *    (probed v1.0, no error). When the ON is a pure equi conjunction
+    *    and a cheap probe proves the source key-unique (the common delta
+    *    shape), or the source is a checked batch, the uid + row_number
+    *    dedup — a full-target shuffle — is SKIPPED entirely; otherwise
+    *    the window path owns correctness.
     *  - insert side (WHEN NOT MATCHED [BY TARGET]): one anti-join keeps
     *    the source rows with no target match, the clause chain picks an
     *    INSERT form, one projection aligns to the target schema.
     *
     * At scale both joins shuffle on the ON keys (AQE broadcasts a small
     * source); when BOTH branches exist the source is pinned to one
-    * evaluation (localCheckpoint — the upsert precedent, executor-side
-    * partitions, no driver collect). Under RETURNING each branch's
-    * annotated frame is checkpointed once and the written state AND the
-    * delta derive from it (the single-eval contract), with the 1.4
-    * `merge_action` pseudo-column ('UPDATE'/'DELETE'/'INSERT') in scope.
-    * ERROR clauses run one limit(1) probe job per branch that carries
-    * one. */
-  private def executeMerge(m: MergeSql.Parsed,
+    * evaluation (localCheckpoint — executor-side partitions, no driver
+    * collect). Under RETURNING each branch's annotated frame is
+    * checkpointed once and the written state AND the delta derive from
+    * it (the single-eval contract; also pinned BEFORE the swap deletes
+    * the old files it reads), with the 1.4 `merge_action` pseudo-column
+    * ('UPDATE'/'DELETE'/'INSERT') in scope. ERROR clauses run one
+    * limit(1) probe job per branch that carries one. */
+  private def executeMerge(rc: RowChange,
                            wantDelta: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{monotonically_increasing_id, row_number}
-    val sanitized = Names.view(m.target)
+    val head = s"${rc.label} ${rc.target}"
+    val sanitized = Names.view(rc.target)
     if (!spark.catalog.tableExists(s"`$sanitized`"))
-      throw new UserException(s"MERGE INTO: table ${m.target} does not exist")
+      throw new UserException(s"${rc.label}: table ${rc.target} does not exist")
     val existing = spark.table(s"`$sanitized`")
-    val tAlias = m.targetAlias.getOrElse(m.target)
-    val (srcSql, sAlias) = MergeSql.sourceOf(m)
-    val clauses = m.clauses
+    val tAlias = rc.targetAlias.getOrElse(rc.target)
+    val sAlias = rc.source.fold("")(_._2)
+    val clauses = rc.clauses
     val matchedClauses = clauses.filter(_.kind == MergeSql.Matched)
     val bySourceClauses = clauses.filter(_.kind == MergeSql.NotMatchedBySource)
     val insClauses = clauses.filter(_.kind == MergeSql.NotMatchedByTarget)
     val needJoin = matchedClauses.nonEmpty || bySourceClauses.nonEmpty
     val needInsert = insClauses.nonEmpty
-    val src0 = bodyDf(srcSql).withColumn("__m_hit", lit(true))
     // both branches consume the source → pin ONE evaluation (a
     // nondeterministic source must propose the same rows to both)
-    val src = if (needJoin && needInsert) src0.localCheckpoint() else src0
-    val srcByLower = src.columns.filter(_ != "__m_hit")
+    val src = rc.source.map { case (df, _) =>
+      val s0 = df.withColumn("__m_hit", lit(true))
+      if (needJoin && needInsert && !rc.checkedBatch) s0.localCheckpoint() else s0
+    }
+    val srcByLower = src.toSeq.flatMap(_.columns).filter(_ != "__m_hit")
       .map(c => c.toLowerCase -> c).toMap
     val byLower = existing.columns.map(c => c.toLowerCase -> c).toMap
     // SET / INSERT column names must exist (loud, like the binder)
     clauses.foreach {
       case MergeSql.Clause(_, _, _, MergeSql.Update(sets)) =>
         sets.foreach { case (k, _) => if (!byLower.contains(k.toLowerCase))
-          throw new UserException(
-            s"MERGE INTO ${m.target}: SET column $k does not exist") }
+          throw new UserException(s"$head: SET column $k does not exist") }
       case MergeSql.Clause(_, _, _, MergeSql.Insert(Some(cs), _)) =>
         cs.foreach(k => if (!byLower.contains(k.toLowerCase))
-          throw new UserException(
-            s"MERGE INTO ${m.target}: INSERT column $k does not exist"))
+          throw new UserException(s"$head: INSERT column $k does not exist"))
       case _ => ()
     }
 
@@ -1256,39 +1109,44 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
           .limit(1).collect()
         if (hit.nonEmpty)
           throw new UserException(errClauses(hit.head.getInt(0)).getOrElse(
-            s"MERGE INTO ${m.target}: a row reached a WHEN ... THEN ERROR " +
+            s"$head: a row reached a WHEN ... THEN ERROR " +
               "clause"))
       }
 
     // ---- target side: matched + not-matched-by-source ----
     val (keptTgt, tgtAnnotated) = if (needJoin) {
-      // SCALE fast path: the row_number dedup below shuffles the FULL
-      // target by uid — the dominant MERGE cost at 100 TB. When the ON
-      // is a pure equi conjunction AND one cheap probe job proves the
-      // source unique on its key side (the overwhelmingly common delta
-      // shape), every target row joins ≤ 1 source row and the dedup is
-      // a no-op: skip the uid column, the window and its exchange — the
-      // plan collapses to one shuffle-or-broadcast join + projection.
-      val srcUnique = MergeSql.equiSourceKeys(m.on, tAlias, sAlias)
-        .exists { keys =>
-          keys.forall(k => srcByLower.contains(k.toLowerCase)) && {
-            val kc = keys.map(k => col(srcByLower(k.toLowerCase)))
-            src.groupBy(kc: _*).count()
-              .filter(col("count") > 1).limit(1).collect().isEmpty
-          }
-        }
-      val one =
-        if (srcUnique)
-          existing.alias(tAlias).join(src.alias(sAlias), expr(m.on), "left_outer")
-        else existing.withColumn("__m_uid", monotonically_increasing_id())
-          .alias(tAlias)
-          .join(src.alias(sAlias), expr(m.on), "left_outer")
-          .withColumn("__m_rn",
-            row_number().over(Window.partitionBy(col("__m_uid"))
-              .orderBy(col("__m_hit").desc_nulls_last)))
-          .filter(col("__m_rn") === 1)
-      val action = when(coalesce(col("__m_hit"), lit(false)),
-        chain(matchedClauses)).otherwise(chain(bySourceClauses))
+      val (one, hit) = src match {
+        case None => (existing.alias(tAlias), lit(true))
+        case Some(s) =>
+          // SCALE fast path: the row_number dedup below shuffles the FULL
+          // target by uid — the dominant MERGE cost at 100 TB. When the
+          // ON is a pure equi conjunction AND one cheap probe job proves
+          // the source unique on its key side (the overwhelmingly common
+          // delta shape), every target row joins ≤ 1 source row and the
+          // dedup is a no-op: skip the uid column, the window and its
+          // exchange — one shuffle-or-broadcast join + projection.
+          val srcUnique = rc.checkedBatch ||
+            MergeSql.equiSourceKeys(rc.on, tAlias, sAlias).exists { keys =>
+              keys.forall(k => srcByLower.contains(k.toLowerCase)) && {
+                val kc = keys.map(k => col(srcByLower(k.toLowerCase)))
+                s.groupBy(kc: _*).count()
+                  .filter(col("count") > 1).limit(1).collect().isEmpty
+              }
+            }
+          val joined =
+            if (srcUnique)
+              existing.alias(tAlias).join(s.alias(sAlias), expr(rc.on), "left_outer")
+            else existing.withColumn("__m_uid", monotonically_increasing_id())
+              .alias(tAlias)
+              .join(s.alias(sAlias), expr(rc.on), "left_outer")
+              .withColumn("__m_rn",
+                row_number().over(Window.partitionBy(col("__m_uid"))
+                  .orderBy(col("__m_hit").desc_nulls_last)))
+              .filter(col("__m_rn") === 1)
+          (joined, coalesce(col("__m_hit"), lit(false)))
+      }
+      val action = when(hit, chain(matchedClauses))
+        .otherwise(chain(bySourceClauses))
       val acted = one.withColumn("__m_action", action)
       val updClauses = clauses.filter(c =>
         c.kind != MergeSql.NotMatchedByTarget &&
@@ -1332,54 +1190,56 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     } else (existing, None)
 
     // ---- insert side: not-matched-by-target ----
-    val (insRows, insAnnotated) = if (needInsert) {
-      val unmatched = src.alias(sAlias)
-        .join(existing.alias(tAlias), expr(m.on), "left_anti")
-      val acted = unmatched.withColumn("__m_action", chain(insClauses))
-        .filter(col("__m_action") =!= -1)
-      val insActionClauses = insClauses.filter(
-        _.action.isInstanceOf[MergeSql.Insert])
-      val projIns = existing.columns.zipWithIndex.map { case (c, ci) =>
-        insActionClauses.foldRight(lit(null): Column) { (cl, acc) =>
-          val value: Column = cl.action match {
-            case MergeSql.Insert(None, None) =>
-              // bare INSERT: the source row BY NAME, missing → NULL
-              srcByLower.get(c.toLowerCase)
-                .map(sc => expr(s"`$sAlias`.`$sc`")).getOrElse(lit(null))
-            case MergeSql.Insert(Some(cs), Some(values)) =>
-              val at = cs.indexWhere(_.equalsIgnoreCase(c))
-              if (at >= 0) expr(values(at)) else lit(null)
-            case MergeSql.Insert(None, Some(values)) =>
-              if (values.length != existing.columns.length)
-                throw new UserException(
-                  s"MERGE INTO ${m.target}: INSERT VALUES has " +
-                    s"${values.length} expressions but the table has " +
-                    s"${existing.columns.length} columns")
-              expr(values(ci))
-            case _ => lit(null) // unreachable (validated non-Insert skipped)
-          }
-          when(col("__m_action") === cl.idx, value).otherwise(acc)
-        }.cast(existing.schema(c).dataType).as(c)
-      }
-      val annotated0 = acted.select(projIns :+ col("__m_action"): _*)
-      val insHasErr = insClauses.exists(_.action.isInstanceOf[MergeSql.Error])
-      val annotated =
-        if (wantDelta || insHasErr) annotated0.localCheckpoint()
-        else annotated0
-      checkErrors(annotated)
-      val insIdxs = insActionClauses.map(_.idx)
-      val rows =
-        if (insIdxs.isEmpty) None
-        else Some(annotated.filter(col("__m_action").isin(insIdxs: _*))
-          .select(existing.columns.map(col): _*))
-      (rows, Some(annotated))
-    } else (None, None)
+    val (insRows, insAnnotated) = src.filter(_ => needInsert) match {
+      case Some(s) =>
+        val unmatched = s.alias(sAlias)
+          .join(existing.alias(tAlias), expr(rc.on), "left_anti")
+        val acted = unmatched.withColumn("__m_action", chain(insClauses))
+          .filter(col("__m_action") =!= -1)
+        val insActionClauses = insClauses.filter(
+          _.action.isInstanceOf[MergeSql.Insert])
+        val projIns = existing.columns.zipWithIndex.map { case (c, ci) =>
+          insActionClauses.foldRight(lit(null): Column) { (cl, acc) =>
+            val value: Column = cl.action match {
+              case MergeSql.Insert(None, None) =>
+                // bare INSERT: the source row BY NAME, missing → NULL
+                srcByLower.get(c.toLowerCase)
+                  .map(sc => expr(s"`$sAlias`.`$sc`")).getOrElse(lit(null))
+              case MergeSql.Insert(Some(cs), Some(values)) =>
+                val at = cs.indexWhere(_.equalsIgnoreCase(c))
+                if (at >= 0) expr(values(at)) else lit(null)
+              case MergeSql.Insert(None, Some(values)) =>
+                if (values.length != existing.columns.length)
+                  throw new UserException(
+                    s"$head: INSERT VALUES has " +
+                      s"${values.length} expressions but the table has " +
+                      s"${existing.columns.length} columns")
+                expr(values(ci))
+              case _ => lit(null) // unreachable (validated non-Insert skipped)
+            }
+            when(col("__m_action") === cl.idx, value).otherwise(acc)
+          }.cast(existing.schema(c).dataType).as(c)
+        }
+        val annotated0 = acted.select(projIns :+ col("__m_action"): _*)
+        val insHasErr = insClauses.exists(_.action.isInstanceOf[MergeSql.Error])
+        val annotated =
+          if (wantDelta || insHasErr) annotated0.localCheckpoint()
+          else annotated0
+        checkErrors(annotated)
+        val insIdxs = insActionClauses.map(_.idx)
+        val rows =
+          if (insIdxs.isEmpty) None
+          else Some(annotated.filter(col("__m_action").isin(insIdxs: _*))
+            .select(existing.columns.map(col): _*))
+        (rows, Some(annotated))
+      case None => (None, None)
+    }
 
     val newState = insRows match {
       case Some(r) => keptTgt.unionByName(r)
       case None => keptTgt
     }
-    writeTable(m.target, newState)
+    writeTable(rc.target, newState)
 
     if (!wantDelta) None
     else {
@@ -1408,26 +1268,23 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
     }
   }
 
-  /** Upsert re-derivation — one anti-join for the fresh inserts plus (for
-    * DO UPDATE) one left join applying the SET projection, then the usual
-    * atomic materialization swap. No per-row path: at 100 TB this is the
-    * shuffle-on-key MERGE shape, broadcastable by AQE when the batch is
-    * small. The insert source is pinned to ONE evaluation first and
-    * returned as the RETURNING delta (probed v1.0: every proposed row,
-    * verbatim). */
+  /** Upsert: the conflict-key resolution and the in-batch duplicate-key
+    * check, then a MERGE on the key ([[executeMerge]]) — at 100 TB the
+    * shuffle-on-key shape, broadcastable by AQE when the batch is small.
+    * The insert source is pinned to ONE evaluation first and returned as
+    * the RETURNING delta (probed v1.0: every proposed row, verbatim). */
   private def upsert(u: UpsertSql.Parsed): DataFrame = {
     val insertInto(name, rest0) = u.insertHead: @unchecked
     val (existing, aligned0) = alignedInsertSource(name, rest0)
     // ONE evaluation of the insert source for every consumer below (the
-    // dup-check aggregate, the anti-join, and — for Replace — the union
-    // branch live in SEPARATE plan subtrees): without the pin a
-    // nondeterministic source (nextval() surrogate keys, uuid(),
-    // random()) draws fresh values per subtree, so the rows checked for
-    // duplicates would not be the rows written, and the sequence would
-    // advance extra times. localCheckpoint materializes the batch as
-    // executor-side partitions (no driver collect); the joins' batch
-    // side stays AQE-broadcastable, and a heavy INSERT..SELECT source is
-    // computed once instead of 2–3×.
+    // dup-check aggregate and the MERGE's join and anti-join live in
+    // SEPARATE plan subtrees): without the pin a nondeterministic source
+    // (nextval() surrogate keys, uuid(), random()) draws fresh values per
+    // subtree, so the rows checked for duplicates would not be the rows
+    // written, and the sequence would advance extra times.
+    // localCheckpoint materializes the batch as executor-side partitions
+    // (no driver collect); the joins' batch side stays AQE-broadcastable,
+    // and a heavy INSERT..SELECT source is computed once instead of 2–3×.
     val aligned = aligned0.localCheckpoint()
     val sanitized = Names.view(name)
     val keysets = keysetsFor(sanitized.toLowerCase)
@@ -1468,43 +1325,27 @@ class Executor(spark: SparkSession, warehouseDir: String, threads: Int = 4) {
         s"PRIMARY KEY constraint violated on $name: duplicate key in the " +
           s"inserted batch (${keyCols.zipWithIndex.map { case (k, i) =>
             s"$k=${dup.head.get(i)}" }.mkString(", ")})")
-    val fresh = aligned.join(
-      existing.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val result = u.action match {
-      case UpsertSql.Replace =>
-        existing.join(aligned.select(keyCols.map(col): _*), keyCols, "left_anti")
-          .unionByName(aligned)
-      case UpsertSql.Ignore =>
-        existing.unionByName(fresh)
-      case UpsertSql.Update(sets, whereTxt) =>
-        // incoming side prefixed so `excluded.c` rewrites to a unique
-        // name and every unqualified reference resolves to the TARGET's
-        // column (the probed DuckDB rule)
-        val marked = aligned
-          .toDF(aligned.columns.map("__excluded_" + _): _*)
-          .withColumn("__excluded___hit", lit(true))
-        val joinCond = keyCols.map(k =>
-          existing(k) === marked(s"__excluded_$k")).reduce(_ && _)
-        val joined = existing.join(marked, joinCond, "left_outer")
-        def rewriteExcluded(e: String): String =
-          e.replaceAll("(?i)\\bexcluded\\s*\\.\\s*", "__excluded_")
-        val hit = whereTxt match {
-          case Some(w) => coalesce(col("__excluded___hit"), lit(false)) &&
-            coalesce(expr(rewriteExcluded(w)), lit(false))
-          case None => coalesce(col("__excluded___hit"), lit(false))
-        }
-        val setMap = sets.map { case (c, e) => c.toLowerCase -> e }.toMap
-        setMap.keys.foreach(c => if (!byLower.contains(c))
-          throw new UserException(s"upsert on $name: SET column $c does not exist"))
-        joined.select(existing.columns.map { c =>
-          setMap.get(c.toLowerCase) match {
-            case Some(e) => when(hit, expr(rewriteExcluded(e))
-              .cast(existing.schema(c).dataType)).otherwise(col(c)).as(c)
-            case None => col(c)
-          }
-        }: _*).unionByName(fresh)
+    // the batch is the MERGE source with its columns renamed: `excluded.c`
+    // (rewritten to `__excluded_c`) reads the incoming row, an
+    // unqualified `c` the TARGET's (the probed DuckDB rule)
+    def excluded(e: String): String =
+      e.replaceAll("(?i)\\bexcluded\\s*\\.\\s*", "__excluded_")
+    val cols = existing.columns.toSeq
+    val incoming = cols.map(c => s"`__excluded_$c`")
+    val onConflict = u.action match {
+      case UpsertSql.Replace => // the conflicting row is replaced WHOLESALE
+        Some(MergeSql.Clause(0, MergeSql.Matched, None, MergeSql.Update(cols.zip(incoming))))
+      case UpsertSql.Ignore => None
+      case UpsertSql.Update(sets, where) =>
+        Some(MergeSql.Clause(0, MergeSql.Matched, where.map(excluded),
+          MergeSql.Update(sets.map { case (c, e) => (c, excluded(e)) })))
     }
-    writeTable(name, result)
+    executeMerge(RowChange("upsert on", name, None,
+      Some((aligned.toDF(cols.map("__excluded_" + _): _*), "__excluded")),
+      keyCols.map(k => s"`$name`.`$k` = `__excluded_$k`").mkString(" AND "),
+      onConflict.toSeq :+ MergeSql.Clause(1, MergeSql.NotMatchedByTarget, None,
+        MergeSql.Insert(Some(cols), Some(incoming))),
+      checkedBatch = true), wantDelta = false)
     aligned
   }
 

@@ -1,10 +1,10 @@
 package graft.component
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructField
 
 /** Output export (reference A6–A10, `src/component.py:155-182`): each
@@ -62,40 +62,68 @@ object Export {
     }: _*)
   }
 
-  /** Single CSV file, header row, all fields quoted — byte-compatible with
-    * the reference's `COPY ... (HEADER, FORCE_QUOTE *)`. The header line is
-    * written by hand and the data rows headerless: Spark's CSV writer only
-    * emits a header from a non-empty partition, while the reference writes
-    * one for empty results too (every golden fixture of the heavy
+  /** THE single-file CSV writer — output tables and `COPY ... TO`. One
+    * staged part file behind a hand-written header row, quoted per
+    * RFC 4180 (a quote inside a field is doubled; a backslash is data):
+    * with the defaults, byte-compatible with the reference's `COPY ...
+    * (HEADER, FORCE_QUOTE *)`. The header is written by hand and the data
+    * rows headerless: Spark's CSV writer only emits a header from a
+    * non-empty partition, while the reference writes one for empty
+    * results too (every golden fixture of the heavy
     * `sync_action_execution_plan` case is a header-only file). */
-  def writeSingleCsv(df: DataFrame, dest: Path): Unit = {
-    val tmp = Files.createTempDirectory("graft_csv_")
-    val stage = tmp.resolve("stage").toString
-    df.coalesce(1).write
-      .option("header", "false")
-      .option("quoteAll", "true")
+  def writeSingleCsv(df: DataFrame, dest: Path, header: Boolean = true,
+                     delimiter: String = ",", quote: String = "\"",
+                     nullValue: String = "", forceQuote: Boolean = true): Unit =
+    withStagedPart { stage =>
+      csvOptions(df.coalesce(1).write, delimiter, quote, nullValue, forceQuote)
+        .option("header", "false").mode("overwrite").csv(stage)
+    } { part =>
+      Files.createDirectories(dest.toAbsolutePath.getParent)
+      val out = Files.newOutputStream(dest)
+      try {
+        if (header) {
+          val line = df.columns
+            .map(c => if (forceQuote) quote + c.replace(quote, quote + quote) + quote else c)
+            .mkString("", delimiter, "\n")
+          out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
+        part.foreach(p => Files.copy(p, out)) // zero rows ⇒ no part file
+      } finally out.close()
+    }
+
+  /** The options of every CSV sink: RFC 4180 quoting (the quote doubles as
+    * its own escape — Spark's default backslash escape is not CSV), the
+    * reference's timestamp and date formats. */
+  private[component] def csvOptions(w: DataFrameWriter[Row], delimiter: String,
+                                    quote: String, nullValue: String,
+                                    forceQuote: Boolean): DataFrameWriter[Row] =
+    w.option("sep", delimiter)
+      .option("quote", quote)
+      .option("escape", quote)
+      .option("nullValue", nullValue)
+      .option("quoteAll", forceQuote.toString)
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
       .option("dateFormat", "yyyy-MM-dd")
-      .mode("overwrite")
-      .csv(stage)
-    val listing = Files.list(Paths.get(stage))
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-      finally listing.close()
-    Files.createDirectories(dest.getParent)
-    val header = df.columns
-      .map(c => "\"" + c.replace("\"", "\"\"") + "\"")
-      .mkString("", ",", "\n")
-    val out = Files.newOutputStream(dest)
+
+  /** Run a one-part Spark write into a fresh temp dir and hand its part
+    * file (None for zero rows) to `use`; the temp dir always goes. */
+  private[component] def withStagedPart(write: String => Unit)(
+      use: Option[Path] => Unit): Unit = {
+    val tmp = Files.createTempDirectory("graft_stage_")
     try {
-      out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      part.foreach(p => Files.copy(p, out)) // zero rows ⇒ no part file
-    } finally out.close()
-    // best-effort cleanup of the staging dir
-    val walk = Files.walk(tmp)
-    try walk.iterator().asScala.toSeq.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    finally walk.close()
+      val stage = tmp.resolve("stage").toString
+      write(stage)
+      val listing = Files.list(Paths.get(stage))
+      val part =
+        try listing.iterator().asScala
+          .find(_.getFileName.toString.startsWith("part-"))
+        finally listing.close()
+      use(part)
+    } finally {
+      val walk = Files.walk(tmp)
+      try walk.iterator().asScala.toSeq.reverse.foreach(p =>
+        try Files.deleteIfExists(p) catch { case _: Exception => () })
+      finally walk.close()
+    }
   }
 }

@@ -24,7 +24,9 @@ package graft.component
   * Parsing only — [[Executor.executeMerge]] runs the plan: one
   * uid-annotated left join for the matched / not-matched-by-source
   * branches, one anti-join for the insert branch (the distributed
-  * shuffle-on-key MERGE shape; no per-row path).
+  * shuffle-on-key MERGE shape; no per-row path). UPDATE, DELETE and the
+  * upserts run as the same derivation, lowered to these clauses
+  * ([[UpdateFromSql]], [[UpsertSql]]).
   */
 object MergeSql {
 
@@ -60,9 +62,10 @@ object MergeSql {
 
   def parse(stmt0: String): Option[Parsed] = {
     val stmt = stmt0.trim.stripSuffix(";")
-    val masked = Dialect.maskQuoted(stmt)
-    val hm = head.findFirstMatchIn(masked).getOrElse(return None)
-    val target = Dialect.unquote(stmt.substring(hm.start(1), hm.end(1)))
+    // the head matches the raw text: its name alternatives read quoted
+    // names, which the masked text blanks
+    val hm = head.findFirstMatchIn(stmt).getOrElse(return None)
+    val target = Dialect.unquote(hm.group(1))
     val alias = Option(hm.group(2))
     val rest = stmt.substring(hm.end)
     val rm = Dialect.maskQuoted(rest)
@@ -255,13 +258,6 @@ object MergeSql {
     if (keys.nonEmpty && keys.forall(_.isDefined)) Some(keys.map(_.get))
     else None
   }
-
-  /** The source relation split into (text-to-run, alias) — same contract
-    * as [[UpdateFromSql.sourceOf]] (bare name with optional alias, or a
-    * parenthesized subquery with a required alias). */
-  def sourceOf(p: Parsed): (String, String) =
-    UpdateFromSql.sourceOf(
-      UpdateFromSql.Parsed(p.target, p.targetAlias, Nil, p.sourceText, ""))
 
   /** Static-analysis twin (the [[UpdateFromSql.stub]] shape): an
     * UpdateTable plan whose EXISTS subquery carries the source — target

@@ -63,6 +63,12 @@ object Planner {
       prod)
   }
 
+  /** Whether one of `q`'s statements is the CREATE VIEW of `name`. */
+  private def createsView(q: Query, name: String): Boolean =
+    q.statements.exists(s =>
+      Executor.createView.findFirstMatchIn(Executor.stripLeadingComments(s))
+        .exists(m => Names.view(m.group(2)).toLowerCase == name))
+
   /** Kahn's algorithm over one block's queries. */
   private[component] def batchBlock(
       queries: List[Query], prod: Map[String, Query]): List[Batch] = {
@@ -77,11 +83,23 @@ object Planner {
         indeg(to) += 1
       }
 
+    // a reader of a view reads the view's tables too: each dependency
+    // expands through CREATE VIEW producers, transitively — for edges
+    // only (lineage and execution_plan report the direct dependencies)
+    def viaViews(deps: Set[String]): Set[String] = {
+      val seen = mutable.Set[String]()
+      def go(d: String): Unit =
+        if (seen.add(d))
+          prod.get(d).filter(createsView(_, d)).foreach(_.dependencies.foreach(go))
+      deps.foreach(go)
+      seen.toSet
+    }
+
     for (q <- queries) {
       // dependency edges: every same-block writer of a read table runs
       // before the reader (a reader must see the final state: CREATE, all
       // INSERTs, and any UPDATE/DELETE re-derivations)
-      for (d <- q.dependencies;
+      for (d <- viaViews(q.dependencies);
            w <- queries if w.outputs.contains(d) && w.blockIdx == q.blockIdx)
         addEdge(w.name, q.name)
       // cross-block producers need no edge (blocks are sequential), but

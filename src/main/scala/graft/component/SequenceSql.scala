@@ -23,16 +23,10 @@ import scala.collection.concurrent.TrieMap
   *
   * SCALE NOTE. A sequence is an inherently serialized object: every row
   * funnels through one counter. This registry is a single-JVM atomic —
-  * exact under local[*] (where the component runs, matching the
-  * reference's embedded single-node engine). On a multi-executor cluster
-  * a global dense counter cannot be both exact and parallel; the scale
-  * path — per-partition BLOCK ALLOCATION, implemented below behind
-  * `PRAGMA graft_sequence_blocks = n` — has each partition-thread
-  * reserve up to n draws atomically and serve them locally: unique
-  * across partitions, monotonic within one, gaps allowed (the trade
-  * every distributed engine makes). Scripts needing dense global ids at
-  * 100 TB should use row_number() OVER an explicit ordering instead;
-  * the lint docs say so.
+  * exact under local[threads], the only mode the component runs in
+  * (matching the reference's embedded single-node engine). Scripts
+  * needing dense global ids at 100 TB should use row_number() OVER an
+  * explicit ordering instead; the lint docs say so.
   *
   * Lifetime is per component run ([[clear]] runs next to Macros.clear):
   * the reference's sequences live in DuckDB's in-memory session the same
@@ -52,52 +46,8 @@ object SequenceSql {
 
   private val catalog = TrieMap[String, State]()
 
-  /** Per-run reset, called by [[Component.run]]. Thread-local blocks
-    * self-invalidate on the next draw (each block pins the State object
-    * it reserved from — see [[next]]), so no cross-thread cleanup is
-    * needed here. */
-  def clear(): Unit = { catalog.clear(); blockSize = 1 }
-
-  // ── per-partition block allocation (the documented scale path) ──────
-  //
-  // A sequence is an inherently serialized object: every row funnels
-  // through one counter. blockSize == 1 (the default) is the exact dense
-  // single-JVM mode — the component's actual execution model. Setting
-  // `PRAGMA graft_sequence_blocks = n` (n > 1) switches nextval to block
-  // reservation: each partition-thread atomically reserves up to n draws
-  // from the global counter and hands them out locally — values stay
-  // UNIQUE across partitions and monotonic within one, but a partially
-  // used block leaves gaps (the trade every distributed engine makes),
-  // and currval reflects the last RESERVED value, not the last handed
-  // out. Each reserved draw goes through the exact single-draw
-  // bound/CYCLE rules, so MAXVALUE/exhaustion semantics are unchanged —
-  // a cluster deployment can never silently emit duplicate keys from
-  // per-executor counters.
-
-  @volatile private var blockSize: Int = 1
-
-  def setBlockSize(n: Long): Unit = {
-    if (n < 1) throw new UserException(
-      s"graft_sequence_blocks must be >= 1 (got $n); 1 = exact dense mode")
-    blockSize = math.min(n, Int.MaxValue.toLong).toInt
-  }
-
-  /** One thread's reserved-but-unserved draws for one sequence. Pins the
-    * State it reserved from: after DROP + re-CREATE (or a run reset) the
-    * stale block self-invalidates instead of leaking old values into the
-    * new sequence. */
-  private final class Block(val from: State) {
-    val vals = new java.util.ArrayDeque[java.lang.Long]()
-  }
-  private val localBlocks =
-    new ThreadLocal[scala.collection.mutable.Map[String, Block]] {
-      override def initialValue() = scala.collection.mutable.Map.empty
-    }
-
-  /** Called by the value expressions' per-partition init: a task must
-    * not inherit the previous task's half-used block on this pool
-    * thread. Clearing only costs gaps, never uniqueness. */
-  def resetLocalBlocks(): Unit = localBlocks.get().clear()
+  /** Per-run reset, called by [[Component.run]]. */
+  def clear(): Unit = catalog.clear()
 
   /** EXPORT DATABASE leg: one CREATE SEQUENCE per live sequence with the
     * CURRENT counter as START (the DuckDB export shape), so a replayed
@@ -155,26 +105,7 @@ object SequenceSql {
     * (probed: MAXVALUE 3 yields 1,2,3 then errors). */
   def next(name: String): Long = {
     val s = state(name)
-    if (blockSize == 1) return s.synchronized(drawLocked(s, name))
-    val blocks = localBlocks.get()
-    val b = blocks.get(name) match {
-      case Some(b0) if b0.from eq s => b0
-      case _ => // first use, or a stale block from a dropped/replaced sequence
-        val b0 = new Block(s); blocks.put(name, b0); b0
-    }
-    if (b.vals.isEmpty) s.synchronized {
-      // reserve up to blockSize draws through the EXACT single-draw
-      // rules; a bound hit mid-block serves the partial block and lets
-      // exhaustion surface on the draw after (the probed v1.0 contract)
-      var i = 0
-      var stop = false
-      while (i < blockSize && !stop) {
-        try b.vals.add(drawLocked(s, name))
-        catch { case e: UserException => if (b.vals.isEmpty) throw e; stop = true }
-        i += 1
-      }
-    }
-    b.vals.poll()
+    s.synchronized(drawLocked(s, name))
   }
 
   /** The exact single-draw: bound check, CYCLE wrap, exhaustion flag.

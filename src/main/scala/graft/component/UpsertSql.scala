@@ -6,10 +6,10 @@ package graft.component
   * DuckDB verbatim, `src/query_orchestrator.py:351`, where upserts are
   * built in; they are the standard incremental-load idiom).
   *
-  * Parsing only — execution is [[Executor.runStatement]]'s re-derivation
-  * (anti-join + left-join projection; one pass over the target, no
-  * per-row RPC — the distributed shape of MERGE). Semantics probed on
-  * DuckDB v1.0 and pinned in StatementSurfaceSpec:
+  * Parsing only — the executor resolves the conflict key, checks the
+  * batch, and runs the statement as a MERGE on that key (one pass over
+  * the target, no per-row RPC). Semantics probed on DuckDB v1.0 and
+  * pinned in StatementSurfaceSpec:
   *  - the conflict target must be the table's declared PRIMARY KEY
   *    (DuckDB: "not referenced by a UNIQUE/PRIMARY KEY constraint");
   *    without an explicit target the PK is used; a table with no PK

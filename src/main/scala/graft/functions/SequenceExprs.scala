@@ -22,11 +22,7 @@ abstract class SequenceValue extends UnaryExpression
     with Nondeterministic with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
-  // block-allocation mode: a fresh task must not inherit the previous
-  // task's half-used block on this pool thread (costs gaps, never
-  // uniqueness); a no-op in the default exact mode
-  override protected def initializeInternal(partitionIndex: Int): Unit =
-    graft.component.SequenceSql.resetLocalBlocks()
+  override protected def initializeInternal(partitionIndex: Int): Unit = ()
   protected def draw(name: String): Long
   override protected def evalInternal(input: InternalRow): Any = {
     val n = child.eval(input)

@@ -57,6 +57,18 @@ class ClauseSemanticsSpec extends SparkSpec {
       .collect().isEmpty)
   }
 
+  test("QUALIFY then ORDER BY on qualified names reads the wrapper's output") {
+    import spark.implicits._
+    Seq((1, 5), (1, 3), (2, 7)).toDF("a", "b").createOrReplaceTempView("cls_q")
+    // `r.b` is selected as bb: the tail's r.b orders by that output
+    val q = sql("SELECT r.a, r.b AS bb FROM cls_q r QUALIFY row_number() OVER " +
+      "(PARTITION BY r.a ORDER BY r.b) = 1 ORDER BY r.a DESC, r.b LIMIT 5")
+    assert(q.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((2, 7), (1, 3)))
+    val j = sql("SELECT r.a, s.b FROM cls_q r JOIN cls_q s ON r.a = s.a AND r.b = s.b " +
+      "QUALIFY row_number() OVER (PARTITION BY r.a ORDER BY s.b DESC) = 1 ORDER BY s.b")
+    assert(j.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 5), (2, 7)))
+  }
+
   test("multi-arg GROUPING is grouping_id (probed bit order)") {
     val r = sql(
       """SELECT g, p, GROUPING(g, p) AS gr FROM

@@ -387,6 +387,21 @@ class ComponentSpec extends SparkSpec {
       List("\"k\",\"v\"", "\"1\",\"a\"", "\"2\",\"c\""))
   }
 
+  test("export writes RFC 4180 CSV: quotes double, backslashes are data") {
+    val dd = datadir()
+    // DuckDB's COPY ... (HEADER, FORCE_QUOTE *) writes these two values as
+    // "plan ""x"", y" and "back\slash"
+    write(dd.resolve("config.json"),
+      """{"parameters": {"blocks": [{"name": "b", "codes": [{"name": "q", "script": [
+        |  "CREATE TABLE notes AS SELECT 1 AS id, 'plan \"x\", y' AS note UNION ALL SELECT 2, 'back' || chr(92) || 'slash'"
+        | ]}]}]},
+        | "storage": {"input": {"tables": []},
+        |             "output": {"tables": [{"source": "notes", "destination": "o"}]}}}""".stripMargin)
+    Component.run(spark, dd.toString)
+    assert(Files.readString(dd.resolve("out/tables/notes")).linesIterator.toList.sorted ==
+      List("\"1\",\"plan \"\"x\"\", y\"", "\"2\",\"back\\slash\"", "\"id\",\"note\""))
+  }
+
   test("DISTINCT ON keeps the first row per key under the statement order") {
     val dd = datadir()
     write(dd.resolve("config.json"),

@@ -188,6 +188,19 @@ class MergeSpec extends SparkSpec {
     assert(out == Seq((1, 20, Some("x")), (2, 40, None)))
   }
 
+  test("MERGE: a quoted target name with an alias parses") {
+    val ex = mkEx()
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    run("CREATE TABLE \"m quoted\" (k INT, v INT)")
+    run("INSERT INTO \"m quoted\" VALUES (1, 1), (2, 2)")
+    run("MERGE INTO \"m quoted\" AS t USING (SELECT 1 AS k) s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET v = 10")
+    assert(rows("m_quoted") == Seq((1, 10), (2, 2)))
+    val an = SqlAnalyzer.analyzeStatement(spark, Dialect.rewrite(
+      "MERGE INTO \"m quoted\" AS t USING m_s ON t.k = m_s.k WHEN MATCHED THEN DELETE"))
+    assert(an.outputs == Set("m_quoted") && an.dependencies == Set("m_quoted", "m_s"), an)
+  }
+
   test("MERGE: validation and loud rejects") {
     val ex = mkEx()
     def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))

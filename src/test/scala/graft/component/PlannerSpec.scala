@@ -54,6 +54,21 @@ class PlannerSpec extends SparkSpec {
     assert(order.indexOf("filler") < order.indexOf("reader"))
   }
 
+  test("a same-block reader of a view waits for DML on the view's tables") {
+    val plan = Planner.plan(spark, Config(
+      blocks = List(
+        Block("b1", List(Code("mk", List("CREATE TABLE bt AS SELECT 1 AS a")),
+          Code("bv", List("CREATE VIEW bv AS SELECT a FROM bt")),
+          Code("bw", List("CREATE VIEW bw AS SELECT * FROM bv")))),
+        Block("b2", List(Code("upd", List("UPDATE bt SET a = 2")),
+          Code("rd", List("CREATE TABLE br AS SELECT * FROM bw"))))),
+      inputTables = Nil, outputTables = Nil))
+    val b2 = plan.blocks(1).batches
+    assert(b2.map(_.queries.map(_.name)) == List(List("upd"), List("rd")))
+    // the reported dependencies stay the direct ones
+    assert(b2(1).queries.head.dependencies == Set("bw"))
+  }
+
   test("cycles raise a user error") {
     val e = intercept[UserException] {
       Planner.plan(spark, cfg(

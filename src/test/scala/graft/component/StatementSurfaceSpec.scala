@@ -734,6 +734,36 @@ class StatementSurfaceSpec extends SparkSpec {
       List(60, 100))
   }
 
+  test("views re-derive through bodyDf across INSERT, RENAME, DROP and re-CREATE") {
+    val dir = Files.createTempDirectory("graft_rebind_")
+    val ex = new Executor(spark, dir.toString)
+    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
+    def rows(v: String) = spark.table(v).collect().map(_.mkString("|")).toSeq.sorted
+    run("CREATE TABLE pt AS SELECT 'a' AS k, 1 AS y, 10 AS x " +
+      "UNION ALL SELECT 'b', 1, 20")
+    // DuckDB-only bodies: PIVOT, FROM-first, * REPLACE
+    run("CREATE VIEW pv AS PIVOT pt ON k USING sum(x) GROUP BY y")
+    run("CREATE VIEW fv AS FROM pt")
+    run("CREATE VIEW rv AS SELECT * REPLACE (x * 2 AS x) FROM pt")
+    run("INSERT INTO pt VALUES ('a', 2, 5)")
+    assert(rows("pv") == Seq("1|10|20", "2|5|null"))
+    assert(rows("fv") == Seq("a|1|10", "a|2|5", "b|1|20"))
+    assert(rows("rv") == Seq("a|1|20", "a|2|10", "b|1|40"))
+    run("ALTER TABLE pt RENAME TO pt2")
+    run("INSERT INTO pt2 VALUES ('b', 2, 1)")
+    assert(rows("pv") == Seq("1|10|20", "2|5|1"))
+    assert(rows("fv").length == 4 && rows("rv").length == 4)
+    // a view over a dropped table is a catalog error, not a read of
+    // deleted files; re-creating the table restores it (late binding)
+    run("DROP TABLE pt2")
+    for (v <- Seq("pv", "fv", "rv"))
+      assert(intercept[org.apache.spark.sql.AnalysisException](spark.table(v))
+        .getMessage.contains("TABLE_OR_VIEW_NOT_FOUND"))
+    run("CREATE TABLE pt2 AS SELECT 'c' AS k, 3 AS y, 7 AS x")
+    assert(rows("pv") == Seq("3|7"))
+    assert(rows("fv") == Seq("c|3|7") && rows("rv") == Seq("c|3|14"))
+  }
+
   test("bare DDL: CREATE TABLE (cols) makes an empty table INSERTs fill") {
     val dir = Files.createTempDirectory("graft_ddl_")
     val ex = new Executor(spark, dir.toString)
@@ -1396,56 +1426,6 @@ class StatementSurfaceSpec extends SparkSpec {
         |  {"name": "q", "script": ["ALTER TABLE apk_t ADD PRIMARY KEY (k)"]}
         |]}]}, "storage": {}}""".stripMargin)
     assert(Actions.syntaxCheck(spark, cfg).isEmpty, Actions.syntaxCheck(spark, cfg))
-  }
-
-  test("sequence block allocation: unique + monotonic across partitions") {
-    val dir = Files.createTempDirectory("graft_seqblk_")
-    DuckFunctions.register(spark)
-    val ex = new Executor(spark, dir.toString)
-    def run(sql: String) = ex.runStatement(Dialect.rewrite(sql))
-    run("CREATE SEQUENCE blk_seq")
-    run("PRAGMA graft_sequence_blocks = 16")
-    try {
-      // a genuinely multi-partition draw: 8 partitions x 125 rows
-      val rows = spark.range(0, 1000, 1, 8)
-        .selectExpr("spark_partition_id() AS p", "nextval('blk_seq') AS id")
-        .collect().map(r => (r.getInt(0), r.getLong(1)))
-      // cross-partition uniqueness — the whole point of the block path
-      assert(rows.length == 1000)
-      assert(rows.map(_._2).distinct.length == 1000)
-      // monotonic WITHIN each partition (blocks reserve in global order)
-      rows.groupBy(_._1).values.foreach { part =>
-        val ids = part.map(_._2)
-        assert(ids.sameElements(ids.sorted), ids.take(10).toSeq)
-      }
-      // gaps bounded by the reserved blocks: counter advanced at most
-      // 1000 + 8 blocks x 16
-      val probe = spark.sql(Dialect.rewrite("SELECT nextval('blk_seq') AS n"))
-        .collect().head.getLong(0)
-      assert(probe > 1000 && probe <= 1000 + 8 * 16 + 1, probe)
-      // MAXVALUE still exact under blocks: a partial block serves, the
-      // draw after the bound errors (probed v1.0 contract)
-      run("CREATE SEQUENCE blk_max MAXVALUE 5")
-      val five = spark.range(0, 5, 1, 1)
-        .selectExpr("nextval('blk_max') AS id").collect().map(_.getLong(0))
-      assert(five.sorted.sameElements(Array(1L, 2L, 3L, 4L, 5L)))
-      val e = intercept[Exception] {
-        spark.sql(Dialect.rewrite("SELECT nextval('blk_max')")).collect()
-      }
-      assert(e.getMessage.contains("maximum value"), e.getMessage)
-      // a stale thread-local block self-invalidates after re-CREATE
-      run("CREATE OR REPLACE SEQUENCE blk_seq START 1")
-      assert(spark.sql(Dialect.rewrite("SELECT nextval('blk_seq') AS n"))
-        .collect().head.getLong(0) == 1L)
-    } finally {
-      run("PRAGMA graft_sequence_blocks = 1") // exact mode back on
-      run("DROP SEQUENCE IF EXISTS blk_seq")  // process-global state
-      run("DROP SEQUENCE IF EXISTS blk_max")
-    }
-    // the knob rejects nonsense loudly
-    assert(intercept[UserException] {
-      run("PRAGMA graft_sequence_blocks = 0")
-    }.getMessage.contains(">= 1"))
   }
 
   test("RETURNING on INSERT / UPDATE / DELETE and the upsert forms") {
